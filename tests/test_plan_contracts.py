@@ -225,7 +225,6 @@ def test_register_wide_path_routes_wearable_wide(spark, tmp_path):
         routed = routed_df.toPandas()
     finally:
         # evicts the plans memoized while the tmp path was registered
-        # (ADVICE r13: a bare _WIDE_AT_REST.clear() left them pinned)
         unregister_wide_path(SF)
 
     import pandas as pd

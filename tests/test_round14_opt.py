@@ -1,17 +1,9 @@
-"""Round-14 optimization pins: the memo-invalidation contract.
-
-The r13 plan memos (tables._RELATION_MEMO, wearable._LONG_MEMO /
-_WIDE_MEMO, registry._PLAN_MEMO) freeze driver-side plans per
-(session, sf_dir, ...).  That is only sound under two contracts, both
-pinned here (VERDICT r13 items 3/8, ADVICE r13):
-
-1. fixture dirs are immutable within a session — no registered sink
-   ever writes under an ``sf_dir`` (every output goes through
-   ``sf_scoped_dir`` into a scratch root outside the fixture tree);
-2. anything that DOES change what a (session, sf_dir) key must serve —
-   ``register_wide_path`` / ``unregister_wide_path`` routing flips, or
-   an explicit ``tables.invalidate(sf_dir)`` — evicts every memoized
-   plan for that sf_dir, source-level and registry-level alike.
+"""The fixture-immutability invariant the plan memo relies on
+(tsengine/sources/memo.py): the memo freezes each sf_dir's file
+listing per session, which is only sound while no registered sink ever
+writes under an ``sf_dir`` — every output goes through
+``sf_scoped_dir`` into a scratch root outside the fixture tree.  The
+eviction side of the contract is pinned in tests/test_memo.py.
 """
 
 from __future__ import annotations
@@ -20,7 +12,6 @@ import os
 import re
 
 SF_A = "/root/testdata/sf0.001"
-SF_B = "/root/testdata/sf0.01"
 
 _TSENGINE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tsengine")
 
@@ -73,74 +64,3 @@ def test_scratch_roots_outside_fixture_tree():
         assert not os.path.realpath(r).startswith(fixture), r
     out = sf_scoped_dir("/tmp/tsengine_pin", SF_A, "leaf")
     assert not os.path.realpath(out).startswith(os.path.realpath(SF_A))
-
-
-def test_invalidate_evicts_all_memo_layers(spark):
-    """tables.invalidate(sf_dir) is the REFRESH-equivalent: it must
-    evict the relation memo, both wearable derivation memos, and every
-    registry plan-memo entry for that sf_dir — and only that sf_dir."""
-    from tsengine import registry
-    from tsengine.registry import all_queries
-    from tsengine.sources import tables, wearable
-
-    qs = all_queries()
-    # populate all layers for both dirs
-    for sf in (SF_A, SF_B):
-        tables.load_table(spark, sf, "events")
-        wearable.wearable_long(spark, sf)
-        wearable.wearable_wide(spark, sf)
-        qs["tumbling_window_agg"].fn(spark, sf)
-    rp_a, rp_b = os.path.realpath(SF_A), os.path.realpath(SF_B)
-    assert any(k[1] == rp_a for k in tables._RELATION_MEMO)
-    assert any(k[1] == rp_a for k in registry._PLAN_MEMO)
-
-    tables.invalidate(SF_A)
-
-    for memo in (
-        tables._RELATION_MEMO,
-        wearable._LONG_MEMO,
-        wearable._WIDE_MEMO,
-        registry._PLAN_MEMO,
-    ):
-        assert not any(k[1] == rp_a for k in memo), "stale sf_dir entry survived"
-        assert any(k[1] == rp_b for k in memo), "unrelated sf_dir was evicted"
-    # and the next call transparently rebuilds
-    assert qs["tumbling_window_agg"].fn(spark, SF_A) is not None
-
-
-def test_register_wide_path_evicts_dependent_plans(spark, tmp_path):
-    """ADVICE r13: registering an at-rest wide path AFTER a dependent
-    query was memoized must evict the memoized plan, so the routed
-    (zero-exchange) plan is actually served; unregistering must evict
-    again so no plan stays pinned to the (possibly deleted) temp path."""
-    from tsengine import registry
-    from tsengine.sources.wearable import (
-        materialize_wide,
-        register_wide_path,
-        unregister_wide_path,
-    )
-
-    def n_exchanges(df) -> int:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return len(re.findall(r"Exchange (?:hash|range)partitioning", plan))
-
-    qs = registry.all_queries()
-    # memoize the derived-path plan first (fft_mag is _PLAN_PURE and
-    # reads wearable_wide)
-    derived = qs["fft_mag"].fn(spark, SF_A)
-    assert n_exchanges(derived) >= 1
-
-    path = str(tmp_path / "wide_at_rest")
-    materialize_wide(spark, SF_A, path)
-    register_wide_path(SF_A, path)
-    try:
-        routed = qs["fft_mag"].fn(spark, SF_A)
-        assert n_exchanges(routed) == 0, (
-            "memoized plan survived register_wide_path — routing ignored"
-        )
-    finally:
-        unregister_wide_path(SF_A)
-    back = qs["fft_mag"].fn(spark, SF_A)
-    assert n_exchanges(back) >= 1, (
-        "plan stayed pinned to the unregistered at-rest path"
-    )

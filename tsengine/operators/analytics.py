@@ -362,9 +362,12 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same stream because a doc's span count IS
     ``size(toks) - K + 1``.  One scan, one span-sized exchange (16-byte
     (doc_id, h) rows), one doc-sized rollup, zero joins (noop 1.95s ->
-    0.91s, 2.1x).  Hot-span skew lands a popular hash on one window partition
-    exactly as it landed on one reducer in the semi-join form — same
-    exposure, pinned by tests/test_skew.py."""
+    0.91s, 2.1x).  Hot-span skew costs MORE than in the old semi-join
+    form: that groupBy(h) was partially aggregated map-side, so a hot
+    hash crossed the exchange as one row per map task, while the
+    WindowExec form shuffles and buffers every row of a hot hash in one
+    partition frame (spilling at scale).  tests/test_skew.py pins
+    exactness under skew, not scale."""
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "toks", F.split("text", " ")
     )
@@ -583,6 +586,9 @@ def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 _V2_MIN_TOKENS = 10
 _V2_MAX_DUP = 0.5
 _V2_KEEP_PCT = 80
+# pipeline_corpus_v2 drops the join back to the survivors: only sound
+# while every doc the token floor keeps also yields >= 1 span
+assert _V2_MIN_TOKENS > _SPAN_K
 
 
 @register(

@@ -13,7 +13,8 @@ Mechanics (plain parquet, no table-format dependency):
      batch, reads back ONLY the affected partitions (partition-pruned
      scan), anti-joins the stale rows out, unions the update rows in,
      and rewrites JUST those partitions via dynamic partition overwrite
-     (``spark.sql.sources.partitionOverwriteMode=dynamic``);
+     (the per-write ``partitionOverwriteMode=dynamic`` option; the
+     session conf is never touched);
   3. untouched partitions are never read or written.
 
 Idempotence: re-running the same merge recomputes byte-identical
@@ -45,7 +46,6 @@ from tsengine.sources.tables import load_table, sf_scoped_dir
 _MERGE_DIR = os.environ.get("TSENGINE_MERGE_DIR", "/tmp/tsengine_merge")
 _N_PARTS = 8
 _SPLIT_DATE = "1999-01-01"
-_OVR_CONF = "spark.sql.sources.partitionOverwriteMode"
 
 
 def _rollup(orders: DataFrame) -> DataFrame:
@@ -74,15 +74,9 @@ def merge_upsert(
     merged = cur.join(
         upd.select(key), key, "left_anti"
     ).unionByName(upd).localCheckpoint(eager=True)
-    old = spark.conf.get(_OVR_CONF, None)
-    spark.conf.set(_OVR_CONF, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("p").parquet(target)
-    finally:
-        if old is None:
-            spark.conf.unset(_OVR_CONF)
-        else:
-            spark.conf.set(_OVR_CONF, old)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("p").parquet(target)
 
 
 @register(
@@ -252,26 +246,20 @@ def compact_partitions(
     file count, and rewritten alone via dynamic partition overwrite —
     untouched partitions are never read or written (the merge_upsert
     scoping rule applied to maintenance)."""
-    old = spark.conf.get(_OVR_CONF, None)
-    spark.conf.set(_OVR_CONF, "dynamic")
-    try:
-        for p in parts:
-            compacted = (
-                spark.read.parquet(target)
-                .filter(F.col("p") == p)  # partition-pruned scan
-                .repartitionByRange(
-                    _HIVE_TARGET_FILES, F.col("ts"), F.col("event_id")
-                )
-                .sortWithinPartitions("ts", "event_id")
-                .localCheckpoint(eager=True)  # pin: about to overwrite
-                # the very files this plan reads
+    for p in parts:
+        compacted = (
+            spark.read.parquet(target)
+            .filter(F.col("p") == p)  # partition-pruned scan
+            .repartitionByRange(
+                _HIVE_TARGET_FILES, F.col("ts"), F.col("event_id")
             )
-            compacted.write.mode("overwrite").partitionBy("p").parquet(target)
-    finally:
-        if old is None:
-            spark.conf.unset(_OVR_CONF)
-        else:
-            spark.conf.set(_OVR_CONF, old)
+            .sortWithinPartitions("ts", "event_id")
+            .localCheckpoint(eager=True)  # pin: about to overwrite
+            # the very files this plan reads
+        )
+        compacted.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("p").parquet(target)
 
 
 @register(

@@ -10,11 +10,12 @@ before anything is declared to the driver.
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from tsengine.sources.memo import memoized
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -231,7 +232,7 @@ _SAMPLE_PRIORITY: tuple[str, ...] = (
 
 
 # ---------------------------------------------------------------------------
-# Plan-metadata memo for PLAN-PURE queries (r13 optimization, guide §5).
+# Plan memo for PLAN-PURE queries (see tsengine/sources/memo.py).
 #
 # A query fn is *plan-pure* when building its DataFrame runs ZERO Spark
 # jobs — no collect/count/localCheckpoint/write, no driver-side fit —
@@ -239,16 +240,12 @@ _SAMPLE_PRIORITY: tuple[str, ...] = (
 # of its computation happens at action time.  For those (and only
 # those) re-invoking the fn per bench pass / sweep re-pays hundreds of
 # ms of py4j expression building + Catalyst analysis for a plan that is
-# provably identical; the registry memoizes the analyzed plan instead,
-# keyed by (applicationId, realpath(sf_dir), name), and serves hits as
-# a select("*") clone so each caller gets a fresh QueryExecution (see
-# tables._RELATION_MEMO for why).  NOT result caching: nothing is
-# materialized, every action on the memoized plan recomputes from the
-# parquet inputs.  Purity is enforced, not assumed —
-# tests/test_round13_opt.py builds every flagged query twice and
-# asserts the warm build runs zero jobs, so a collect() sneaking into a
-# flagged fn fails the suite rather than silently moving compute out of
-# the timed region.
+# provably identical, so the registry memoizes it under
+# ``("plan", name)``.  Purity is enforced, not assumed —
+# tests/test_memo.py builds every flagged query twice and asserts the
+# warm build runs zero jobs, so a collect() sneaking into a flagged fn
+# fails the suite rather than silently moving compute out of the timed
+# region.
 _PLAN_PURE: frozenset[str] = frozenset({
     "scan_examples",
     "channel_fuse",
@@ -283,11 +280,9 @@ _PLAN_PURE: frozenset[str] = frozenset({
 # by design); memoizing either would hoist real work out of the
 # measured path.
 
-_PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-# Process-lifetime hit counter (ADVICE r13): lets measurement harnesses
-# (bench.py) record how many builds were served from the memo, making
-# the memoized-plan 'steady' semantics auditable in the artifact.
+# Process-lifetime count of plan-level memo hits (ADVICE r13): lets
+# measurement harnesses (bench.py) record how many builds were served
+# from the memo, making the memoized-plan 'steady' semantics auditable.
 PLAN_MEMO_HITS: int = 0
 
 
@@ -295,13 +290,15 @@ def _memoize_plan(name: str, fn: QueryFn) -> QueryFn:
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         global PLAN_MEMO_HITS
-        key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
-        hit = _PLAN_MEMO.get(key)
-        if hit is not None:
-            PLAN_MEMO_HITS += 1
-            return hit.select("*")
-        out = fn(spark, sf_dir)
-        _PLAN_MEMO[key] = out
+        built = False
+
+        def build() -> DataFrame:
+            nonlocal built
+            built = True
+            return fn(spark, sf_dir)
+
+        out = memoized(spark, sf_dir, ("plan", name), build)
+        PLAN_MEMO_HITS += not built
         return out
 
     return wrapped

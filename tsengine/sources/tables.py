@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tsengine.sources.memo import invalidate, memoized  # noqa: F401 (re-export)
+
 TABLES = (
     "region",
     "nation",
@@ -41,47 +43,6 @@ def sf_scoped_dir(base: str, sf_dir: str, leaf: str) -> str:
     return os.path.join(base, f"{leaf}_{tag}")
 
 
-# Plan-metadata memo (r13 optimization, guide §5/§6): one DataFrame —
-# i.e. one *lazy relation*, no materialized data — per (session, sf_dir,
-# table).  Every spark.read.parquet() call pays ~80-120 ms of DRIVER-side
-# file listing + footer schema read + analysis; the engine's query fns
-# are re-invoked per bench pass / oracle check, so without the memo the
-# same immutable fixture table was re-listed hundreds of times per run
-# (measured: load_table(events) 116 ms/call -> ~0 warm).  This is the
-# session-scoped listing reuse guide §6 describes for catalog tables,
-# applied to path tables.  NOT result caching: a DataFrame is a plan;
-# every action still scans the parquet files.  Keyed by applicationId so
-# a stopped/rebuilt session can never serve stale JVM references, and by
-# realpath so two sf dirs never alias.
-#
-# HARD INVARIANT (r14, VERDICT r13 item 8): fixture dirs are IMMUTABLE
-# within a session — the memo freezes the driver-side file listing and
-# schema per (session, sf_dir, table), so an operator that wrote into an
-# ``sf_dir`` table mid-session would be served a stale listing.  Today
-# no registered query writes under an sf_dir (every sink goes through
-# sf_scoped_dir / the artifact publish protocol into scratch roots
-# OUTSIDE the fixture tree — pinned by
-# tests/test_round14_opt.py::test_no_registered_sink_writes_under_sf_dir).
-# Code that must re-route or regenerate a source dir calls
-# ``invalidate(sf_dir)`` (the REFRESH-equivalent) first.
-_RELATION_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def invalidate(sf_dir: str) -> None:
-    """Evict every memoized relation for ``sf_dir`` (all sessions, all
-    tables) — the path-table equivalent of ``REFRESH TABLE``.  Required
-    before serving reads after an in-session rewrite of a fixture dir;
-    see the invariant note on ``_RELATION_MEMO``.  Downstream plan memos
-    (wearable derivations, registry plan memo) are evicted too — they
-    embed these relations."""
-    rp = os.path.realpath(sf_dir)
-    for k in [k for k in _RELATION_MEMO if k[1] == rp]:
-        del _RELATION_MEMO[k]
-    from tsengine.sources import wearable
-
-    wearable._evict_sf_dir_memos(sf_dir)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """``scan_examples`` analog: columnar scan of one driver table.
 
@@ -96,16 +57,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from tsengine.session import ensure_runtime_env
 
     ensure_runtime_env(spark)
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
-    hit = _RELATION_MEMO.get(key)
-    if hit is not None:
-        # cheap clone (~10 ms: reuses the analyzed relation, no listing):
-        # callers must each get a FRESH QueryExecution — executing the
-        # shared object in place would finalize its AQE plan and every
-        # later explain() would render the Final+Initial double tree.
-        # The extra Project collapses in the optimizer; physical plans
-        # are identical (tests/test_plan_contracts.py passes unchanged).
-        return hit.select("*")
+    return memoized(
+        spark, sf_dir, ("table", name), lambda: _scan(spark, sf_dir, name)
+    )
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # Normalize ts to TIMESTAMP (instant, session tz pinned to UTC by
@@ -123,7 +80,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             # naive wall-clock == UTC instant (engine semantics are UTC)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _RELATION_MEMO[key] = df
     return df
 
 

@@ -28,9 +28,12 @@ shuffling once on ``user_id``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tsengine.sources.memo import WIDE_ROUTES, invalidate, memoized
 from tsengine.sources.tables import load_table
 
 # Window length used on driver tables: events has ~66 rows/user at every
@@ -40,16 +43,6 @@ from tsengine.sources.tables import load_table
 SEQ_LEN = 50
 
 
-# Plan-metadata memo (r13 optimization; see tables._RELATION_MEMO): the
-# derivation below is a pure LAZY plan — window exprs over the events
-# relation, nothing materialized — yet constructing it costs ~300 ms of
-# driver-side py4j/analysis per call, and a dozen downstream operators
-# build on it in every bench pass.  One plan per (session, sf_dir,
-# seq_len); every action on it still computes from parquet.
-_LONG_MEMO: dict[tuple[str, str, int], DataFrame] = {}
-_WIDE_MEMO: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def wearable_long(spark: SparkSession, sf_dir: str, seq_len: int = SEQ_LEN) -> DataFrame:
     """Long-form windowed-sequence table:
     (patient_id, window_id, t, ibi, acc, label, split).
@@ -57,13 +50,12 @@ def wearable_long(spark: SparkSession, sf_dir: str, seq_len: int = SEQ_LEN) -> D
     Only complete windows (exactly ``seq_len`` samples) are kept,
     mirroring the reference's pre-trimmed length-200 sequences.
     """
-    import os as _os
+    return memoized(
+        spark, sf_dir, ("long", seq_len), lambda: _derive_long(spark, sf_dir, seq_len)
+    )
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir), seq_len)
-    hit = _LONG_MEMO.get(key)
-    if hit is not None:
-        # fresh QueryExecution per caller — see tables._RELATION_MEMO
-        return hit.select("*")
+
+def _derive_long(spark: SparkSession, sf_dir: str, seq_len: int) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wu = Window.partitionBy("user_id")
@@ -100,56 +92,28 @@ def wearable_long(spark: SparkSession, sf_dir: str, seq_len: int = SEQ_LEN) -> D
         .withColumn("label", F.when(F.col("patient_id") % 3 == 0, 1).otherwise(0))
         .withColumn("split", F.when(F.col("patient_id") % 10 < 8, "train").otherwise("test"))
     )
-    _LONG_MEMO[key] = out
     return out
-
-
-# process-local wide-at-rest registrations: (sf_dir, seq_len) -> parquet
-# path written by materialize_wide.  When registered, wearable_wide serves
-# the zero-exchange at-rest scan instead of re-deriving — the 100 TB
-# deployment shape (ETL once, kernels read the materialized layout).
-# Explicit registration (no env var) so nothing can silently serve a
-# stale path for a different scale factor.
-_WIDE_AT_REST: dict[tuple[str, int], str] = {}
-
-
-def _evict_sf_dir_memos(sf_dir: str) -> None:
-    """Drop every memoized plan keyed to ``sf_dir`` (r14, ADVICE r13):
-    re-routing a source changes what future builds of the same
-    (session, sf_dir) key must return, so plans memoized under the OLD
-    routing — here and in the registry-level plan memo — must not be
-    served afterwards (a stale hit would keep a plan pinned to a
-    deleted temp path, or silently ignore the new routing)."""
-    import os as _os
-
-    from tsengine import registry
-
-    rp = _os.path.realpath(sf_dir)
-    for memo in (_LONG_MEMO, _WIDE_MEMO):
-        for k in [k for k in memo if k[1] == rp]:
-            del memo[k]
-    for k in [k for k in registry._PLAN_MEMO if k[1] == rp]:
-        del registry._PLAN_MEMO[k]
 
 
 def register_wide_path(sf_dir: str, path: str, seq_len: int = SEQ_LEN) -> None:
     """Route subsequent ``wearable_wide(spark, sf_dir)`` calls in this
     process to the materialized table at ``path`` (see
-    :func:`materialize_wide`).  Byte-identical data by construction —
-    the table IS the derivation's output.  Evicts every plan memoized
-    for ``sf_dir`` so already-built queries pick up the routing too."""
-    _WIDE_AT_REST[(sf_dir, seq_len)] = path
-    _evict_sf_dir_memos(sf_dir)
+    :func:`materialize_wide`) — the deployment shape: ETL once, kernels
+    read the materialized layout.  Byte-identical data by construction:
+    the table IS the derivation's output.  Explicit registration (no env
+    var), so nothing can silently serve a path for another scale
+    factor.  Replaces any earlier route for ``sf_dir`` and evicts every
+    plan memoized for it, so already-built queries pick up the route."""
+    invalidate(sf_dir)
+    WIDE_ROUTES[(os.path.realpath(sf_dir), seq_len)] = path
 
 
-def unregister_wide_path(sf_dir: str, seq_len: int = SEQ_LEN) -> None:
+def unregister_wide_path(sf_dir: str) -> None:
     """Undo :func:`register_wide_path` (test/ETL teardown): route
-    ``wearable_wide`` back to the live derivation AND evict plans
-    memoized while the at-rest path was registered — otherwise a memo
-    hit keeps serving a plan pinned to a possibly-deleted temp path
-    (FileNotFound at action time)."""
-    _WIDE_AT_REST.pop((sf_dir, seq_len), None)
-    _evict_sf_dir_memos(sf_dir)
+    ``wearable_wide`` back to the live derivation and evict the plans
+    built while the route was registered, which would otherwise stay
+    pinned to a possibly-deleted path (FileNotFound at action time)."""
+    invalidate(sf_dir)
 
 
 def wearable_wide(spark: SparkSession, sf_dir: str, seq_len: int = SEQ_LEN) -> DataFrame:
@@ -160,25 +124,20 @@ def wearable_wide(spark: SparkSession, sf_dir: str, seq_len: int = SEQ_LEN) -> D
     If :func:`register_wide_path` has routed this (sf_dir, seq_len) to a
     materialized at-rest table, scan that instead (zero exchanges).
     """
-    at_rest = _WIDE_AT_REST.get((sf_dir, seq_len))
-    if at_rest is not None:
-        return read_wide(spark, at_rest).select(
-            "patient_id", "window_id", "label", "split", "ibi", "acc"
-        )
-    import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir), seq_len)
-    hit = _WIDE_MEMO.get(key)
-    if hit is not None:
-        # fresh QueryExecution per caller — see tables._RELATION_MEMO
-        return hit.select("*")
-    long = wearable_long(spark, sf_dir, seq_len)
-    out = long.groupBy("patient_id", "window_id", "label", "split").agg(
-        F.array_sort(F.collect_list(F.struct("t", "ibi"))).getField("ibi").alias("ibi"),
-        F.array_sort(F.collect_list(F.struct("t", "acc"))).getField("acc").alias("acc"),
-    )
-    _WIDE_MEMO[key] = out
-    return out
+    def build() -> DataFrame:
+        at_rest = WIDE_ROUTES.get((os.path.realpath(sf_dir), seq_len))
+        if at_rest is not None:
+            return read_wide(spark, at_rest).select(
+                "patient_id", "window_id", "label", "split", "ibi", "acc"
+            )
+        long = wearable_long(spark, sf_dir, seq_len)
+        return long.groupBy("patient_id", "window_id", "label", "split").agg(
+            F.array_sort(F.collect_list(F.struct("t", "ibi"))).getField("ibi").alias("ibi"),
+            F.array_sort(F.collect_list(F.struct("t", "acc"))).getField("acc").alias("acc"),
+        )
+
+    return memoized(spark, sf_dir, ("wide", seq_len), build)
 
 
 def wearable_long_sql(seq_len: int = SEQ_LEN) -> str:

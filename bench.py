@@ -36,7 +36,7 @@ HEADLINE = [
     "channel_fuse",           # projection-shaped per-timestep transform
     "conv1d_encode",          # windowed dot product (lag/lead frame)
     "fft_mag",                # Arrow pandas_udf kernel
-    "gru_context",            # grouped-map recurrence (applyInPandas)
+    "gru_context",            # batched recurrence kernel (mapInPandas)
     "nce_loss",               # batch-scoped contrastive self-join
     "classification_report",  # grouped multi-agg
     "roc_auc",                # rank-sum window agg
@@ -98,42 +98,7 @@ def main() -> int:
     spark = get_spark("tsengine-bench")
     qs = all_queries()
 
-    # Warm the JVM/codegen/parquet-reader paths and the Python worker
-    # pool once so per-query timings measure the queries, not session
-    # startup (standard bench hygiene; no headline query is pre-run).
-    spark.range(10**6).selectExpr("sum(id)").collect()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    from pyspark.sql.functions import pandas_udf
-
-    # one concurrent Arrow task per core so the whole daemon-forked
-    # worker pool exists before the first timed kernel (a single small
-    # job only forks a couple of workers; the first 32-partition
-    # mapInPandas stage then pays ~1-2s of fork+import inside a timing)
-    ncores = spark.sparkContext.defaultParallelism
-
-    def _warm_fn(s):
-        import numpy as np  # preload the kernel imports in every pooled worker
-
-        return s + int(np.int64(1))
-
-    _warm = pandas_udf(_warm_fn, "long")
-    spark.range(10**5).repartition(ncores).select(_warm("id")).count()
-
-    # Engine warm-up at the SMALLEST scale factor: running every headline
-    # query shape once at sf0.001 compiles the generated-code classes
-    # (Janino caches by code identity, so the sf0.1 plans reuse them),
-    # JIT-warms the agg/window/Arrow paths and spins the kernel workers —
-    # WITHOUT touching the benchmarked sf0.1 data, whose scans, shuffles
-    # and kernels below are still executed cold.  This is engine warm-up,
-    # not result caching: timings measure sf0.1 execution, not JVM
-    # compilation noise.
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf) and os.path.realpath(warm_sf) != os.path.realpath(sf_dir):
-        for name in HEADLINE:
-            try:
-                qs[name].fn(spark, warm_sf).count()
-            except Exception:
-                pass
+    warm_up(spark, sf_dir)
 
     # NOTE on the wide-at-rest layout: production would materialize_wide
     # once and register_wide_path so every per-window kernel is a
@@ -235,6 +200,49 @@ def main() -> int:
         print(f"bench detail not written ({exc})", file=sys.stderr)
     print(json.dumps(summary))
     return 0
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM/codegen/parquet-reader paths and the Python worker
+    pool once so per-query timings measure the queries, not session
+    startup (standard bench hygiene; no headline query is pre-run)."""
+    from pyspark.sql.functions import pandas_udf
+
+    from tsengine.registry import all_queries
+
+    spark.range(10**6).selectExpr("sum(id)").collect()
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+
+    # one concurrent Arrow task per core so the whole daemon-forked
+    # worker pool exists before the first timed kernel (a single small
+    # job only forks a couple of workers; the first 32-partition
+    # mapInPandas stage then pays ~1-2s of fork+import inside a timing)
+    ncores = spark.sparkContext.defaultParallelism
+
+    def _warm_fn(s):
+        import numpy as np  # preload the kernel imports in every pooled worker
+
+        return s + int(np.int64(1))
+
+    _warm = pandas_udf(_warm_fn, "long")
+    spark.range(10**5).repartition(ncores).select(_warm("id")).count()
+
+    # Engine warm-up at the SMALLEST scale factor: running every headline
+    # query shape once at sf0.001 compiles the generated-code classes
+    # (Janino caches by code identity, so the sf0.1 plans reuse them),
+    # JIT-warms the agg/window/Arrow paths and spins the kernel workers —
+    # WITHOUT touching the benchmarked sf0.1 data, whose scans, shuffles
+    # and kernels are still executed cold in the timed passes.  This is
+    # engine warm-up, not result caching: timings measure sf0.1
+    # execution, not JVM compilation noise.
+    qs = all_queries()
+    warm_sf = "/root/testdata/sf0.001"
+    if os.path.isdir(warm_sf) and os.path.realpath(warm_sf) != os.path.realpath(sf_dir):
+        for name in HEADLINE:
+            try:
+                qs[name].fn(spark, warm_sf).count()
+            except Exception:
+                pass
 
 
 if __name__ == "__main__":

@@ -20,6 +20,10 @@ def test_steady_plans_do_not_recompile(spark, sf_dir):
     import __spark_entry__ as entry
 
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4000"
+    # shuffle and AQE sizing as measured in SCALING.md (session.py builder)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false"
+    assert spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes") == "8388608"
     queries = entry.queries()
     jvm = Jvm(spark)
     per_pass = []

@@ -230,33 +230,6 @@ def test_streaming_topk_multi_batch_matches_batch(spark, sf_dir, split_events_di
     pd.testing.assert_frame_equal(streamed.astype(batch.dtypes.to_dict()), batch)
 
 
-def test_tws_twin_gated_without_protobuf(spark, sf_dir):
-    """user_topk_stream_tws raises a clear ImportError when the
-    protobuf state-server runtime is absent (and is exercised for real
-    where it exists)."""
-    from tsengine.streaming.stateful import _have_tws_runtime, user_topk_stream_tws
-    from tsengine.streaming.windows import read_events_stream
-
-    if not _have_tws_runtime():
-        with pytest.raises(ImportError, match="protobuf"):
-            user_topk_stream_tws(read_events_stream(spark, sf_dir))
-        return
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    s = user_topk_stream_tws(read_events_stream(spark, sf_dir))
-    q = (
-        s.writeStream.format("memory")
-        .queryName("topk_tws")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.sql("SELECT * FROM topk_tws").count() > 0
-
-
 def test_streaming_scd2_multi_batch_matches_batch(spark, sf_dir, split_events_dir):
     """Intervals that SPAN micro-batch boundaries must close with the
     correct accumulated (n_events, sum_value): drained closed intervals

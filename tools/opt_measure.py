@@ -36,7 +36,7 @@ def main() -> int:
     ap.add_argument("--out", default=None, help="JSON timings path")
     args = ap.parse_args()
 
-    import bench  # HEADLINE list
+    import bench  # HEADLINE list, warm_up
 
     from tsengine.registry import all_queries
     from tsengine.session import get_spark
@@ -46,26 +46,7 @@ def main() -> int:
     qs = all_queries()
     names = args.only.split(",") if args.only else list(bench.HEADLINE)
 
-    # same engine warm-up as bench.py: codegen at sf0.001, worker pool
-    spark.range(10**6).selectExpr("sum(id)").collect()
-    from pyspark.sql.functions import pandas_udf
-
-    ncores = spark.sparkContext.defaultParallelism
-
-    def _warm_fn(s):
-        import numpy as np
-
-        return s + int(np.int64(1))
-
-    _warm = pandas_udf(_warm_fn, "long")
-    spark.range(10**5).repartition(ncores).select(_warm("id")).count()
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf) and os.path.realpath(warm_sf) != os.path.realpath(args.sf):
-        for name in names:
-            try:
-                qs[name].fn(spark, warm_sf).count()
-            except Exception:
-                pass
+    bench.warm_up(spark, args.sf)
 
     plan_dir = os.path.join(REPO, "plans", args.round)
     os.makedirs(plan_dir, exist_ok=True)

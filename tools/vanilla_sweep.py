@@ -4,18 +4,19 @@ against its ``oracle_sql()`` twin on a **vanilla** SparkSession — no
 tsengine configs, no PYTHONPATH, any cwd — exactly how the external
 correctness harness invokes the repo.  ``tests/test_vanilla_session.py``
 guards two representative queries in-suite; this sweep is the full-
-coverage version run before each round lands.
+coverage version run before each round lands.  The loop itself is
+``check_oracle.sweep``.
 
 Usage (note: run from OUTSIDE the repo to prove cwd independence):
 
-    cd /tmp && python /root/repo/tools/vanilla_sweep.py [sf_dir]
+    cd /tmp && python <repo>/tools/vanilla_sweep.py [sf_dir]
 """
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession  # noqa: E402
 
 spark = (
     SparkSession.builder.master("local[32]")
@@ -25,32 +26,7 @@ spark = (
 )
 
 import __spark_entry__ as e  # noqa: E402
+from check_oracle import sweep  # noqa: E402
 
-from tsengine.testing import compare, duck_connect  # noqa: E402
-
-qs, osql = e.queries(), e.oracle_sql()
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-con = duck_connect(SF)
-n_ok = n_fail = n_rows = 0
-for name in sorted(qs):
-    t0 = time.time()
-    try:
-        df = qs[name](spark, SF)
-        if name not in osql:
-            n = df.count()
-            print(f"[rows] {name}: {n} ({time.time()-t0:.1f}s)", flush=True)
-            n_rows += 1
-            continue
-        res = compare(name, df, osql[name], con)
-        print(f"{res} ({time.time()-t0:.1f}s)", flush=True)
-        n_ok += res.ok
-        n_fail += not res.ok
-    except Exception as ex:  # noqa: BLE001
-        print(
-            f"[FAIL] {name}: {type(ex).__name__}: "
-            f"{str(ex).splitlines()[0][:160]}",
-            flush=True,
-        )
-        n_fail += 1
-print(f"{n_ok} ok, {n_fail} fail, {n_rows} rows-only")
-sys.exit(1 if n_fail else 0)
+sys.exit(1 if sweep(spark, SF, e.queries(), e.oracle_sql()) else 0)

@@ -9,11 +9,9 @@ shuffle key = ((window_id + 1) * (epoch + 1) * 2654435761) % (2^31-1),
 row_number over that key, batch = floor(rn / bs).
 
 Scale note: the ROW_NUMBER here is a global sort over *windows* (rows /
-seq_len — already 50x reduced). At true 100 TB scale the engine swaps
-exact equal-size batches for hash-sliced batches
-(batch = key % n_batches, no global sort) — same statistical effect,
-embarrassingly parallel; `batch_hash_sliced` below implements that
-form too.
+seq_len — already 50x reduced).  At true 100 TB scale exact equal-size
+batches would give way to hash-sliced batches (batch = key % n_batches,
+no global sort) — same statistical effect, embarrassingly parallel.
 """
 
 from __future__ import annotations
@@ -79,9 +77,3 @@ def scan_batched(spark: SparkSession, sf_dir: str, epoch: int = 0) -> DataFrame:
             ).alias("batch_id"),
         )
     )
-
-
-def batch_hash_sliced(df: DataFrame, n_batches: int, epoch: int = 0) -> DataFrame:
-    """Scale path: shuffle-free batch assignment (approximately equal
-    batch sizes, no global sort) — batch = hash(window_id, epoch) % n."""
-    return df.withColumn("batch_id", _shuffle_key(epoch) % n_batches)

@@ -151,14 +151,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_exact_keep_first(docs: DataFrame) -> DataFrame:
-    """Materializing form: keep min(doc_id) per distinct text — the
-    operator a pipeline actually runs."""
-    return docs.withColumn("_k", F.md5("text")).groupBy("_k").agg(
-        F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_copies")
-    ).drop("_k")
-
-
 # ---------------------------------------------------------------------------
 # exact n-gram Jaccard (inverted-index join)
 # ---------------------------------------------------------------------------

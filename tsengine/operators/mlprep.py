@@ -286,8 +286,6 @@ def target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LF_ROLL = 5
-
 _LF_ORACLE = """
 WITH l AS (
   SELECT event_id, user_id, ts, value,

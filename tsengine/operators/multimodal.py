@@ -78,11 +78,6 @@ def media_payload_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_payload_table_from(docs)
 
 
-_DECODE_SCHEMA = (
-    "media_id long, media_type string, width long, height long, "
-    "n_frames long, sample_rate long, n_channels long, duration_ms long"
-)
-
 _WAV_RATE_SQL = (
     "CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000 "
     "WHEN 2 THEN 22050 ELSE 44100 END"

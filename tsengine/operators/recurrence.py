@@ -2,10 +2,11 @@
 `gru_context`, §7.3.1).
 
 A GRU is inherently sequential *within* a window but embarrassingly
-parallel *across* windows, so the Spark shape is a grouped-map UDF:
-``groupBy(window_id).applyInPandas(numpy recurrence)``.  Window state is
-bounded (seq_len × hidden floats), so executor memory is safe at any
-total scale; the shuffle is one hash partition on window_id.
+parallel *across* windows, so the Spark shape is one Arrow-batched
+``mapInPandas`` pass over the wide form (one row per window) that runs
+the numpy recurrence vectorized across the batch's windows.  Window
+state is bounded (seq_len × hidden floats), so executor memory is safe
+at any total scale, and the pass adds no shuffle.
 
 Weights are frozen, seeded numpy (mirroring the reference's init at
 `T_CPC.py:30-45`); rows-only oracle (recursive-CTE emulation in DuckDB
@@ -17,10 +18,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from tsengine.registry import register
-from tsengine.sources.wearable import wearable_long
 
 HIDDEN = 8
 _SEED = 42
@@ -84,9 +83,10 @@ def gru_batch(x: np.ndarray, w: dict[str, np.ndarray]) -> np.ndarray:
 def gru_context_final(df_wide: DataFrame, hidden: int = HIDDEN, seed: int = _SEED) -> DataFrame:
     """Final GRU context per window from the *wide* form — the scale
     path.  One mapInPandas pass, Arrow-batched and vectorized across
-    windows; no per-group pandas overhead and no extra shuffle (the
-    ``applyInPandas`` long form pays a hash partition on window_id plus
-    per-group DataFrame construction — ~6x slower at sf0.1)."""
+    windows; no per-group pandas overhead and no extra shuffle (a
+    grouped-map ``applyInPandas`` over the long form paid a hash
+    partition on window_id plus per-group DataFrame construction — ~6x
+    slower at sf0.1)."""
     import pandas as pd
 
     w = gru_weights(n_in=2, hidden=hidden, seed=seed)
@@ -112,33 +112,6 @@ def gru_context_final(df_wide: DataFrame, hidden: int = HIDDEN, seed: int = _SEE
             yield pd.DataFrame(out)
 
     return df_wide.select("window_id", "ibi", "acc").mapInPandas(fn, schema=schema)
-
-
-def gru_context(df_long: DataFrame, hidden: int = HIDDEN, seed: int = _SEED) -> DataFrame:
-    """Per-window GRU contexts: long (window_id, t, ibi, acc) ->
-    (window_id, t, h0..h{hidden-1}).  Input features are the scaled
-    (ibi/1000, acc/16) pair per step."""
-    w = gru_weights(n_in=2, hidden=hidden, seed=seed)
-    schema = "window_id long, t int, " + ", ".join(
-        f"h{i} double" for i in range(hidden)
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        x = np.stack(
-            [pdf["ibi"].to_numpy() / 1000.0, pdf["acc"].to_numpy() / 16.0], axis=1
-        )
-        h = gru_sequence(x, w)
-        out = {"window_id": pdf["window_id"].to_numpy(), "t": pdf["t"].to_numpy()}
-        for i in range(hidden):
-            out[f"h{i}"] = np.round(h[:, i], 6)
-        return pd.DataFrame(out)
-
-    return (
-        df_long.select("window_id", "t", "ibi", "acc")
-        .groupBy("window_id")
-        .applyInPandas(fn, schema=schema)
-    )
 
 
 def gru_fold_lambda(w: dict[str, np.ndarray], n_in: int, hidden: int) -> str:
@@ -226,9 +199,9 @@ def gru_context_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight GRU is a pure fold, so the DuckDB twin replays it with
     ``list_reduce`` from the same weight literals (see
     :func:`_gru_oracle_sql`) — upgrading THE custom operator from a
-    rows-only check to full value verification.  Parity between the
-    batched mapInPandas kernel and the per-step ``applyInPandas`` form
-    is additionally pytest-asserted."""
+    rows-only check to full value verification.  The batched kernel
+    is also pytest-checked against the per-sequence numpy recurrence
+    :func:`gru_sequence`."""
     from tsengine.sources.wearable import wearable_wide
 
     return gru_context_final(wearable_wide(spark, sf_dir))

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine.operators.fuse import FUSED_CTE, fused_nonzero
@@ -133,42 +133,6 @@ def conv1d_join_form(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("window_id", F.col("t_out").alias("t"), "oc")
         .agg(F.round(F.sum("wx"), 6).alias("y"))
     )
-
-
-def conv1d_np(df_wide: DataFrame, weights: np.ndarray, out_col: str = "conv") -> DataFrame:
-    """Vectorized production path: numpy conv over the wide form via
-    mapInPandas (Arrow batches) — the shape used by the CPC inference
-    pipelines where 64 output channels would make the relational join
-    form shuffle-heavy.  ``weights``: [n_out, n_in, 3]."""
-    n_out = weights.shape[0]
-    schema = (
-        "window_id long, label int, "
-        + ", ".join(f"{out_col}_{i} array<double>" for i in range(n_out))
-    )
-    b_w = weights
-
-    def fn(batches):
-        for pdf in batches:
-            fused = np.stack(
-                [
-                    np.stack(pdf["ibi"].values)
-                    * (np.stack(pdf["acc"].values) == c)
-                    for c in range(b_w.shape[1])
-                ],
-                axis=1,
-            ).astype(np.float64)  # [bs, C, L]
-            padded = np.pad(fused, ((0, 0), (0, 0), (1, 1)))
-            out = np.zeros((fused.shape[0], n_out, fused.shape[2]))
-            for d in range(3):
-                out += np.einsum(
-                    "bcl,oc->bol", padded[:, :, d : d + fused.shape[2]], b_w[:, :, d]
-                )
-            data = {"window_id": pdf["window_id"], "label": pdf["label"]}
-            for i in range(n_out):
-                data[f"{out_col}_{i}"] = list(out[:, i, :])
-            yield pd.DataFrame(data)
-
-    return df_wide.mapInPandas(fn, schema=schema)
 
 
 # ---------------------------------------------------------------------------

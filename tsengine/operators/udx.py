@@ -3,7 +3,7 @@ the reference's torch/numpy kernels map onto, each registered as a
 driver-checkable query:
 
 * scalar vectorized pandas_udf  -> spectral.fft_mag, ml kernels
-* grouped-map applyInPandas     -> recurrence.gru_context
+* grouped-map applyInPandas     -> similarity.knn_graph_update
 * SQL-aggregate UDAF            -> timeseries.ema_smooth (higher-order
   ``aggregate``)
 * pandas GROUPED_AGG UDAF       -> ``grouped_geomean_udaf`` (here)

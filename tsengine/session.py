@@ -109,7 +109,7 @@ def _ship_package(spark: SparkSession) -> None:
         sc.addPyFile(z)
 
 
-def get_spark(app_name: str = "tsengine", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "tsengine") -> SparkSession:
     """Build (or fetch) the session.
 
     All settings below are semantics-preserving performance knobs; the
@@ -125,8 +125,6 @@ def get_spark(app_name: str = "tsengine", shuffle_partitions: int | None = None)
         os.environ["PYTHONPATH"] = f"{repo_root}{os.pathsep}{pp}" if pp else repo_root
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("TSENGINE_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -146,19 +144,13 @@ def get_spark(app_name: str = "tsengine", shuffle_partitions: int | None = None)
         # shuffles that parallelism-first fans out to 32 near-empty
         # tasks each: measured cold headline 31.3s -> 13.9s at sf0.1,
         # 100x steady-state total 54.4s -> 42.5s, worst 100x query
-        # ratio 25x -> 14x (SCALING.md).  Env overrides keep the
-        # tradeoff measurable per deployment.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("TSENGINE_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("TSENGINE_AQE_ADVISORY_BYTES", "8388608"),
-        )
+        # ratio 25x -> 14x (SCALING.md).  A deployment re-measures the
+        # tradeoff through TSENGINE_EXTRA_CONF (below).
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8388608")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- shuffle sizing (override on a real cluster) ---
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # --- shuffle sizing (a real cluster overrides via TSENGINE_EXTRA_CONF) ---
+        .config("spark.sql.shuffle.partitions", "32")
         # --- Arrow for every pandas_udf / toPandas edge ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -81,7 +81,3 @@ def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # naive wall-clock == UTC instant (engine semantics are UTC)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -261,10 +261,9 @@ def stream_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the batch ROW_NUMBER oracle: streaming state
     machinery vs batch window plan, row-for-row.
 
-    Runs the ``applyInPandasWithState`` kernel here; the Spark-4
-    ``transformWithStateInPandas`` twin (named ListState, RocksDB
-    provider) ships as ``user_topk_stream_tws`` and is used where the
-    protobuf state-server runtime exists (stateful.py)."""
+    The kernel is ``applyInPandasWithState`` (stateful.py); Spark 4's
+    ``transformWithStateInPandas`` needs the google.protobuf runtime
+    for its state server, which this engine does not require."""
     from pyspark.sql import functions as F
 
     from tsengine.streaming.stateful import user_topk_stream

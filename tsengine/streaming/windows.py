@@ -22,7 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_HOUR_SEC = 3600
+# Shuffle partitions for a drain's state stores (see run_available_now).
+_STATE_PARTITIONS = 8
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,14 +194,13 @@ def run_available_now(
     drained batch of the fixture paid 128 near-empty commits
     (stream_interval_join: 60s of cumulative commit task-time, 8.9s
     wall for KBs of state).  Drains therefore size state partitions by
-    state VOLUME via ``TSENGINE_STREAM_STATE_PARTITIONS`` (default 8 —
-    still multi-partition, so distribution bugs stay visible); a real
-    deployment with GBs of state overrides upward.  Hash partitioning
-    by key is unchanged, so results are identical at any setting."""
+    state VOLUME: ``_STATE_PARTITIONS`` (8 — still multi-partition, so
+    distribution bugs stay visible) for the drain only, restored after.
+    Hash partitioning by key is unchanged, so results are identical at
+    any setting."""
     spark = stream_df.sparkSession
-    n_state = os.environ.get("TSENGINE_STREAM_STATE_PARTITIONS", "8")
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_state)
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.format("memory")

@@ -191,6 +191,9 @@ def main() -> int:
                     **summary,
                     "queries_steady_passes": steady_passes,
                     "codegen_compiles_steady_passes": steady_compiles,
+                    # the installed pyspark unless tsengine.worker_daemon
+                    # fell back to Spark's pyspark.zip
+                    "python_worker_pyspark": worker_pyspark(spark),
                 },
                 fh,
                 indent=1,
@@ -200,6 +203,15 @@ def main() -> int:
         print(f"bench detail not written ({exc})", file=sys.stderr)
     print(json.dumps(summary))
     return 0
+
+
+def worker_pyspark(spark) -> str:
+    """``pyspark.__file__`` as a Python worker of ``spark`` imports it."""
+    return (
+        spark.sparkContext.parallelize([0], 1)
+        .map(lambda _: __import__("pyspark").__file__)
+        .first()
+    )
 
 
 def warm_up(spark, sf_dir: str) -> None:

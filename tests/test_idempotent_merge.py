@@ -107,6 +107,27 @@ def test_registered_query_matches_full_rollup(spark, sf_dir):
     assert g == e
 
 
+def test_registered_query_is_scoped_to_its_process(spark, sf_dir, monkeypatch):
+    """A second process running the query on the same sf_dir rewrites
+    its own table, so this process's read-back keeps its files (one
+    shared table failed with FAILED_READ_FILE.FILE_NOT_EXIST)."""
+    from tsengine.operators.merging import _MERGE_DIR
+    from tsengine.sources.tables import sf_scoped_dir
+
+    mine = idempotent_write_merge(spark, sf_dir)
+    expect = {tuple(r) for r in mine.collect()}
+    other = os.getpid() + 1
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(os, "getpid", lambda: other)
+            assert idempotent_write_merge(spark, sf_dir).count() == len(expect)
+        assert {tuple(r) for r in mine.collect()} == expect
+    finally:
+        shutil.rmtree(
+            sf_scoped_dir(_MERGE_DIR, sf_dir, f"cust_rollup_{other}"), ignore_errors=True
+        )
+
+
 def test_compact_small_files_contract(spark, oracle_sf_dir):
     """The compaction's operational contract (the oracle hash proves
     losslessness; this pins the part the oracle can't see): 64

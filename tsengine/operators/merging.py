@@ -34,7 +34,6 @@ Delta/Iceberg/Hudi re-expressed over vanilla partitioned parquet.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,8 +108,9 @@ def idempotent_write_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain GROUP BY over orders — a hash match proves
     both the merge algebra and its idempotence in one check."""
     orders = load_table(spark, sf_dir, "orders")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    target = os.path.join(_MERGE_DIR, f"cust_rollup_{tag}")
+    # one table per process: the base load overwrites it, so two
+    # processes on one sf_dir would delete each other's read-back files
+    target = sf_scoped_dir(_MERGE_DIR, sf_dir, f"cust_rollup_{os.getpid()}")
 
     with_p = lambda df: df.withColumn(  # noqa: E731
         "p", (F.col("o_custkey") % _N_PARTS).cast("int")

@@ -11,7 +11,11 @@ cache is sized to the registry's working set (2699 generated classes
 per sf0.01 pass, cache 4000), so steady passes stop recompiling: the
 CPC-path queries compile 110 classes per repeat pass at Spark's default
 of 100 entries and at most a handful here (0 in most passes); a
-vanilla session keeps 100 and loses only speed.
+vanilla session keeps 100 and loses only speed.  Python workers fork
+from ``tsengine.worker_daemon``, which runs them on the installed
+pyspark instead of ``$SPARK_HOME``'s pyspark.zip, so a task no longer
+spends 120-230 ms re-reading that zip's directory; a vanilla session
+keeps Spark's daemon, same results.
 """
 
 from __future__ import annotations
@@ -165,6 +169,10 @@ def get_spark(app_name: str = "tsengine") -> SparkSession:
         # sf0.01 passes, against 126/16/0 at 4000 (third pass 5.1s ->
         # 4.1s).  Speed only: a vanilla session keeps 100, same results.
         .config("spark.sql.codegen.cache.maxEntries", "4000")
+        # --- Python workers: import the installed pyspark, not the zip ---
+        # saves each task 120-230 ms of zip re-reads (worker_daemon.py).
+        # Speed only: a vanilla session keeps Spark's daemon, same results.
+        .config("spark.python.daemon.module", "tsengine.worker_daemon")
         # --- scans: keep splits big enough to amortize task overhead ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # --- broadcast joins for small dims (driver tables region/nation/...) ---

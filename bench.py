@@ -101,8 +101,8 @@ def main() -> int:
     warm_up(spark, sf_dir)
 
     # NOTE on the wide-at-rest layout: production would materialize_wide
-    # once and register_wide_path so every per-window kernel is a
-    # zero-exchange scan (plan-contract-tested).  The bench deliberately
+    # once and feed read_wide to the kernels, so every per-window kernel
+    # is a zero-exchange scan (plan-contract-tested).  The bench deliberately
     # measures the full derive-from-events path per query — at sf0.1 the
     # one-time ETL write costs exactly what it saves, and hiding it
     # outside the timings would overstate the suite.

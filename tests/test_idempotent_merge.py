@@ -128,6 +128,48 @@ def test_registered_query_is_scoped_to_its_process(spark, sf_dir, monkeypatch):
         )
 
 
+_EXIT_SCRIPT = """
+import os, sys
+from tsengine.operators.merging import compact_small_files, idempotent_write_merge
+from tsengine.session import get_spark
+
+spark = get_spark("merge-exit")
+sf_dir = sys.argv[1]
+assert idempotent_write_merge(spark, sf_dir).count() > 0
+assert compact_small_files(spark, sf_dir).count() > 0
+print(os.getpid())
+for d in ("TSENGINE_MERGE_DIR", "TSENGINE_COMPACT_DIR"):
+    print(" ".join(sorted(os.listdir(os.environ[d]))))
+"""
+
+
+def test_process_scratch_tables_removed_at_exit(sf_dir, tmp_path):
+    """A process's merge and compaction tables carry its pid and go away
+    when it exits, so runs no longer pile up tables in the scratch dirs."""
+    import subprocess
+    import sys
+
+    env = dict(
+        os.environ,
+        TSENGINE_MERGE_DIR=str(tmp_path / "merge"),
+        TSENGINE_COMPACT_DIR=str(tmp_path / "compact"),
+        TSENGINE_DRIVER_MEM="1g",
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", _EXIT_SCRIPT, sf_dir],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    pid, merge_seen, compact_seen = run.stdout.strip().splitlines()[-3:]
+    assert merge_seen.startswith(f"cust_rollup_{pid}_"), merge_seen
+    assert {n.rsplit("_", 1)[0] for n in compact_seen.split()} == {
+        f"fragments_{pid}", f"compacted_{pid}"
+    }, compact_seen
+    assert not os.listdir(tmp_path / "merge")
+    assert not os.listdir(tmp_path / "compact")
+
+
 def test_compact_small_files_contract(spark, oracle_sf_dir):
     """The compaction's operational contract (the oracle hash proves
     losslessness; this pins the part the oracle can't see): 64
@@ -142,15 +184,15 @@ def test_compact_small_files_contract(spark, oracle_sf_dir):
         _COMPACT_FRAGMENTS,
         _COMPACT_TARGET_FILES,
         compact_small_files,
+        process_dir,
     )
-    from tsengine.sources.tables import sf_scoped_dir
 
     compact_small_files(spark, oracle_sf_dir).count()
     frag = glob.glob(
-        os.path.join(sf_scoped_dir(_COMPACT_DIR, oracle_sf_dir, "fragments"), "*.parquet")
+        os.path.join(process_dir(_COMPACT_DIR, oracle_sf_dir, "fragments"), "*.parquet")
     )
     comp = glob.glob(
-        os.path.join(sf_scoped_dir(_COMPACT_DIR, oracle_sf_dir, "compacted"), "*.parquet")
+        os.path.join(process_dir(_COMPACT_DIR, oracle_sf_dir, "compacted"), "*.parquet")
     )
     assert len(frag) == _COMPACT_FRAGMENTS
     assert 1 <= len(comp) <= _COMPACT_TARGET_FILES

@@ -6,14 +6,13 @@ key) — never data.  These tests pin what makes it safe:
 1. isolation — executing one caller's DataFrame must not finalize the
    AQE plan another caller observes (each hit is a fresh QueryExecution
    over the shared analyzed child);
-2. key discipline — different sf dirs never alias, and two spellings
-   of one dir share its entries and its at-rest route;
+2. key discipline — different sf dirs and different sessions never
+   alias, and two spellings of one dir share its entries;
 3. value identity — a hit computes exactly what a cold build does;
 4. purity — every registry query memoized as a plan builds without
    running a Spark job;
-5. eviction — ``invalidate(sf_dir)``, and every routing change that
-   goes through it, drops every key kind and the at-rest route for
-   that dir, and only that dir.
+5. eviction — ``invalidate(sf_dir)`` drops every key kind for that
+   dir, and only that dir.
 """
 
 from __future__ import annotations
@@ -53,6 +52,22 @@ def test_memo_keys_do_not_alias_sf_dirs(spark):
     a = load_table(spark, SF_A, "events")
     b = load_table(spark, SF_B, "events")
     assert a.count() != b.count()  # 1000 vs 10000 rows
+
+
+def test_memo_keys_by_session_and_realpath(spark):
+    """Two spellings of one dir share an entry; a child session gets
+    frames bound to itself, never its parent's, which Spark would plan
+    under the parent's SQL conf."""
+    from tsengine.session import scoped_session
+    from tsengine.sources import memo
+    from tsengine.sources.tables import load_table
+
+    load_table(spark, SF_A, "events")
+    n = len(memo._STORE)
+    assert load_table(spark, SF_A + "/", "events").sparkSession is spark
+    assert len(memo._STORE) == n
+    child = scoped_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+    assert load_table(child, SF_A, "events").sparkSession is child
 
 
 def test_plan_pure_queries_run_zero_jobs_at_build(spark):
@@ -142,81 +157,3 @@ def test_invalidate_evicts_all_memo_layers(spark):
     assert kinds(rp_b) == set(KINDS), "unrelated sf_dir was evicted"
     # and the next call transparently rebuilds
     assert qs["tumbling_window_agg"].fn(spark, SF_A) is not None
-
-
-def test_register_wide_path_evicts_dependent_plans(spark, tmp_path):
-    """ADVICE r13: registering an at-rest wide path AFTER a dependent
-    query was memoized must evict the memoized plan, so the routed
-    (zero-exchange) plan is actually served; unregistering must evict
-    again so no plan stays pinned to the (possibly deleted) temp path."""
-    from tsengine import registry
-    from tsengine.sources.wearable import (
-        materialize_wide,
-        register_wide_path,
-        unregister_wide_path,
-    )
-
-    qs = registry.all_queries()
-    # memoize the derived-path plan first (fft_mag is _PLAN_PURE and
-    # reads wearable_wide)
-    derived = qs["fft_mag"].fn(spark, SF_A)
-    assert _n_exchanges(derived) >= 1
-
-    path = str(tmp_path / "wide_at_rest")
-    materialize_wide(spark, SF_A, path)
-    register_wide_path(SF_A, path)
-    try:
-        routed = qs["fft_mag"].fn(spark, SF_A)
-        assert _n_exchanges(routed) == 0, (
-            "memoized plan survived register_wide_path — routing ignored"
-        )
-    finally:
-        unregister_wide_path(SF_A)
-    back = qs["fft_mag"].fn(spark, SF_A)
-    assert _n_exchanges(back) >= 1, (
-        "plan stayed pinned to the unregistered at-rest path"
-    )
-
-
-def test_wide_route_matches_any_spelling_of_sf_dir(spark, tmp_path):
-    """A route registered under one spelling of the dir (trailing
-    slash) serves wearable_wide called with another."""
-    from tsengine.sources.wearable import (
-        materialize_wide,
-        register_wide_path,
-        unregister_wide_path,
-        wearable_wide,
-    )
-
-    path = str(tmp_path / "wide_at_rest")
-    materialize_wide(spark, SF_A, path)
-    register_wide_path(SF_A + "/", path)
-    try:
-        assert _n_exchanges(wearable_wide(spark, SF_A)) == 0, (
-            "route registered as sf_dir + '/' was not served"
-        )
-    finally:
-        unregister_wide_path(SF_A + "/")
-
-
-def test_invalidate_drops_wide_route(spark, tmp_path):
-    """invalidate(sf_dir) means the dir's data changed, so the at-rest
-    table derived from the old data must stop being served."""
-    from tsengine.sources import tables
-    from tsengine.sources.wearable import (
-        materialize_wide,
-        register_wide_path,
-        unregister_wide_path,
-        wearable_wide,
-    )
-
-    path = str(tmp_path / "wide_at_rest")
-    materialize_wide(spark, SF_A, path)
-    register_wide_path(SF_A, path)
-    try:
-        tables.invalidate(SF_A)
-        assert _n_exchanges(wearable_wide(spark, SF_A)) >= 1, (
-            "invalidate kept serving the at-rest table of the old data"
-        )
-    finally:
-        unregister_wide_path(SF_A)

@@ -204,37 +204,6 @@ def test_wide_at_rest_zero_exchange(spark, tmp_path):
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_register_wide_path_routes_wearable_wide(spark, tmp_path):
-    """bench.py's ETL-once routing: after register_wide_path, every
-    wearable_wide(spark, sf_dir) call serves the at-rest scan (zero
-    exchanges) with values identical to the derived path."""
-    from tsengine.sources.wearable import (
-        materialize_wide,
-        register_wide_path,
-        unregister_wide_path,
-        wearable_wide,
-    )
-
-    derived = wearable_wide(spark, SF).toPandas()
-    path = str(tmp_path / "wide")
-    materialize_wide(spark, SF, path)
-    register_wide_path(SF, path)
-    try:
-        routed_df = wearable_wide(spark, SF)
-        assert _n_exchanges(routed_df) == 0, "routed wide table still shuffles"
-        routed = routed_df.toPandas()
-    finally:
-        # evicts the plans memoized while the tmp path was registered
-        unregister_wide_path(SF)
-
-    import pandas as pd
-
-    cols = sorted(derived.columns)
-    a = derived[cols].sort_values("window_id").reset_index(drop=True)
-    b = routed[cols].sort_values("window_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
 def test_mining_family_plan_shapes(spark):
     """Scale claims from tsengine/operators/mining.py docstrings:
     reservoir_sample is a shuffle-free TakeOrdered (per-partition top-k,
@@ -348,30 +317,21 @@ def test_bloom_pruned_join_runtime_filter(spark):
     might_contain predicate onto the lineitem (probe) side — the
     100 TB join-reduction shape bloom_pruned_join exists to pin."""
     from tsengine.operators.extensions import _BLOOM_CONFS, _bloom_join_df
+    from tsengine.session import scoped_session
 
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        df = _bloom_join_df(spark, SF)
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "bloom_filter_agg" in opt
-        assert "might_contain" in opt
-        # the probe-side filter references the lineitem key, not orders
-        probe_filter = next(
-            l for l in opt.splitlines() if "might_contain" in l
-        )
-        assert "l_orderkey" in probe_filter
-        # and the join stayed a shuffle join (runtime filters never
-        # fire on broadcast joins)
-        phys = _plan(df)
-        assert "BroadcastHashJoin" not in phys.split("LeftSemi")[0]
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    df = _bloom_join_df(scoped_session(spark, _BLOOM_CONFS), SF)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "bloom_filter_agg" in opt
+    assert "might_contain" in opt
+    # the probe-side filter references the lineitem key, not orders
+    probe_filter = next(
+        l for l in opt.splitlines() if "might_contain" in l
+    )
+    assert "l_orderkey" in probe_filter
+    # and the join stayed a shuffle join (runtime filters never
+    # fire on broadcast joins)
+    phys = _plan(df)
+    assert "BroadcastHashJoin" not in phys.split("LeftSemi")[0]
 
 
 def test_new_graph_text_ops_plan_shape(spark):

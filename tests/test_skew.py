@@ -55,6 +55,7 @@ def skewed_docs_dir(spark, tmp_path_factory):
 
 def test_minhash_lsh_band_join_splits_hot_bucket(spark, skewed_docs_dir):
     from tsengine.operators.dedup import dedup_minhash_lsh
+    from tsengine.session import scoped_session
 
     confs = {
         # force the shuffled-join path AQE skew handling applies to
@@ -68,24 +69,15 @@ def test_minhash_lsh_band_join_splits_hot_bucket(spark, skewed_docs_dir):
         # the median; keep the natural layout for the detector
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        # single aggregated execution: collecting THIS DataFrame drives
-        # its own queryExecution, so the final adaptive plan inspected
-        # below is the plan that actually ran
-        cnt = dedup_minhash_lsh(spark, skewed_docs_dir).groupBy().count()
-        t0 = time.perf_counter()
-        n = cnt.collect()[0][0]
-        wall = time.perf_counter() - t0
-        plan = cnt._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    # single aggregated execution: collecting THIS DataFrame drives
+    # its own queryExecution, so the final adaptive plan inspected
+    # below is the plan that actually ran
+    skewed = scoped_session(spark, confs)
+    cnt = dedup_minhash_lsh(skewed, skewed_docs_dir).groupBy().count()
+    t0 = time.perf_counter()
+    n = cnt.collect()[0][0]
+    wall = time.perf_counter() - t0
+    plan = cnt._jdf.queryExecution().executedPlan().toString()
 
     # every identical-doc pair surfaces via its shared buckets (exact
     # count: background docs are all distinct, no accidental collision
@@ -148,6 +140,7 @@ def test_ann_lsh_shuffle_join_splits_hot_bucket(spark, skewed_emb_dir):
     byte-identical to the hot vector, so their top-k neighbors are all
     at cosine 1.0."""
     from tsengine.operators.similarity import TOP_K, ann_lsh
+    from tsengine.session import scoped_session
 
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -156,21 +149,13 @@ def test_ann_lsh_shuffle_join_splits_hot_bucket(spark, skewed_emb_dir):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        res = ann_lsh(spark, skewed_emb_dir, broadcast_queries=False)
-        t0 = time.perf_counter()
-        rows = res.collect()
-        wall = time.perf_counter() - t0
-        plan = res._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    res = ann_lsh(
+        scoped_session(spark, confs), skewed_emb_dir, broadcast_queries=False
+    )
+    t0 = time.perf_counter()
+    rows = res.collect()
+    wall = time.perf_counter() - t0
+    plan = res._jdf.queryExecution().executedPlan().toString()
 
     hot_q = [r for r in rows if r.query_id in (0, 1)]
     assert len(hot_q) == 2 * TOP_K

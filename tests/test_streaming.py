@@ -20,8 +20,9 @@ def _canon(df):
 
 
 def test_tumbling_stream_matches_batch(spark, sf_dir):
-    ev = read_events_stream(spark, sf_dir)
-    streamed = run_available_now(tumbling_stream(ev), "t_tumbling")
+    streamed = run_available_now(
+        spark, lambda s: tumbling_stream(read_events_stream(s, sf_dir)), "t_tumbling"
+    )
     batch = all_queries()["tumbling_window_agg"].fn(spark, sf_dir)
     pd.testing.assert_frame_equal(
         _canon(streamed), _canon(batch), check_dtype=False
@@ -91,9 +92,11 @@ def test_interval_join_stream_matches_batch(spark, sf_dir):
     from tsengine.sources.tables import load_table
     from tsengine.streaming.windows import interval_join_stream
 
-    ev = read_events_stream(spark, sf_dir)
     streamed = run_available_now(
-        interval_join_stream(ev), "t_interval_join", output_mode="append"
+        spark,
+        lambda s: interval_join_stream(read_events_stream(s, sf_dir)),
+        "t_interval_join",
+        output_mode="append",
     )
 
     bev = load_table(spark, sf_dir, "events")

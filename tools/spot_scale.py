@@ -420,7 +420,7 @@ def main() -> int:
     names = args.names or DEFAULT_NAMES
 
     from tools.scale_probe import SRC, _dst, time_suite
-    from tsengine.session import get_spark
+    from tsengine.session import get_spark, scoped_session
 
     tier_dir = _dst(args.tier)
     if not os.path.exists(os.path.join(tier_dir, "lineitem.parquet")):
@@ -441,12 +441,9 @@ def main() -> int:
     # pays a driver collect a real cluster input would never take.
     # Re-time with broadcast disabled so the planner picks the shuffle
     # join a 100 TB input would get, and record THAT ratio.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        sj_small = time_suite(spark, SRC, ["semi_join", "anti_join"])
-        sj_big = time_suite(spark, tier_dir, ["semi_join", "anti_join"])
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    no_bcast = scoped_session(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+    sj_small = time_suite(no_bcast, SRC, ["semi_join", "anti_join"])
+    sj_big = time_suite(no_bcast, tier_dir, ["semi_join", "anti_join"])
     lines = [
         "# SCALING_TAIL — long-tail scale spot-check",
         "",

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from tsengine.oracle.frags import SUP_METRICS_CTE, with_ctes
 from tsengine.registry import register
+from tsengine.session import scoped_session
 from tsengine.sources.tables import load_table
 
 
@@ -685,8 +686,8 @@ def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe side is huge — exactly the 100 TB design point; production would
 # keep the defaults (creation side <= 10 MB, probe scan >= 10 GB) and
 # get the rewrite automatically.  Locally the tables are far below the
-# probe threshold, so the query scopes the confs and binds eagerly to
-# demonstrate the very plan a cluster would run.
+# probe threshold, so the query plans on a child session with these
+# confs and binds eagerly to demonstrate the plan a cluster would run.
 _BLOOM_CONFS = {
     # force the shuffle join (runtime filters never fire on broadcasts —
     # a broadcast build side IS already a perfect filter)
@@ -742,23 +743,14 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the oracle.
 
     The rewrite is an optimizer-time rule gated on size thresholds
-    (default: probe scan >= 10 GB), so this query scopes
-    ``_BLOOM_CONFS`` and binds its 3-row aggregate EAGERLY
-    (localCheckpoint) while they hold; production at the design scale
-    runs the identical declarative join with default confs and gets the
-    same plan from the optimizer.  tests/test_plan_contracts.py pins
-    the bloom filter's presence in the optimized plan."""
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        return _bloom_join_df(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    (default: probe scan >= 10 GB), so this query plans on a
+    ``scoped_session`` child carrying ``_BLOOM_CONFS`` and binds its
+    3-row aggregate EAGERLY (localCheckpoint) there; production at the
+    design scale runs the identical declarative join with default confs
+    and gets the same plan from the optimizer.  tests/test_plan_contracts.py
+    pins the bloom filter's presence in the optimized plan."""
+    child = scoped_session(spark, _BLOOM_CONFS)
+    return _bloom_join_df(child, sf_dir).localCheckpoint(eager=True)
 
 
 _PROFILE_NUM = ("o_orderkey", "o_custkey", "o_totalprice")

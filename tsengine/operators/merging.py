@@ -34,7 +34,9 @@ Delta/Iceberg/Hudi re-expressed over vanilla partitioned parquet.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +47,19 @@ from tsengine.sources.tables import load_table, sf_scoped_dir
 _MERGE_DIR = os.environ.get("TSENGINE_MERGE_DIR", "/tmp/tsengine_merge")
 _N_PARTS = 8
 _SPLIT_DATE = "1999-01-01"
+_OWN_DIRS: set[str] = set()
+
+
+def process_dir(base: str, sf_dir: str, leaf: str) -> str:
+    """This process's scratch table under ``base``, removed when the
+    process exits.  The queries below overwrite theirs on every call, so
+    two processes on one sf_dir must not share one; the read-back frames
+    are lazy, so the table must outlive the call."""
+    path = sf_scoped_dir(base, sf_dir, f"{leaf}_{os.getpid()}")
+    if path not in _OWN_DIRS:
+        _OWN_DIRS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _rollup(orders: DataFrame) -> DataFrame:
@@ -108,9 +123,7 @@ def idempotent_write_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain GROUP BY over orders — a hash match proves
     both the merge algebra and its idempotence in one check."""
     orders = load_table(spark, sf_dir, "orders")
-    # one table per process: the base load overwrites it, so two
-    # processes on one sf_dir would delete each other's read-back files
-    target = sf_scoped_dir(_MERGE_DIR, sf_dir, f"cust_rollup_{os.getpid()}")
+    target = process_dir(_MERGE_DIR, sf_dir, "cust_rollup")
 
     with_p = lambda df: df.withColumn(  # noqa: E731
         "p", (F.col("o_custkey") % _N_PARTS).cast("int")
@@ -171,8 +184,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partition's data, never the table.  ``compact_partitioned``
     below demonstrates exactly that composition with the hive layout
     of ``idempotent_write_merge``."""
-    frag = sf_scoped_dir(_COMPACT_DIR, sf_dir, "fragments")
-    out = sf_scoped_dir(_COMPACT_DIR, sf_dir, "compacted")
+    frag = process_dir(_COMPACT_DIR, sf_dir, "fragments")
+    out = process_dir(_COMPACT_DIR, sf_dir, "compacted")
     ev = load_table(spark, sf_dir, "events")
     # pathological layout: 64 round-robin fragments (what a chatty
     # incremental writer leaves behind)
@@ -221,7 +234,7 @@ def build_mixed_layout(spark: SparkSession, sf_dir: str) -> str:
     each), hot partitions scattered across 16 fragment files apiece —
     what a chatty incremental writer leaves behind in the partitions
     it actually lands data in."""
-    target = sf_scoped_dir(_COMPACT_DIR, sf_dir, "hive")
+    target = process_dir(_COMPACT_DIR, sf_dir, "hive")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "p", (F.col("user_id") % _HIVE_N_PARTS).cast("int")
     )

@@ -10,12 +10,14 @@ same query fns over the same fixtures.  The memo keeps the analyzed
 plan.  It is NOT result caching: an entry is a DataFrame, nothing is
 materialized, and every action still scans the parquet files.
 
-Key: ``(applicationId, realpath(sf_dir), key)`` where ``key`` names
-what is cached — ``("table", name)``, ``("long", seq_len)``,
-``("wide", seq_len)`` or ``("plan", name)``.  The application id keeps
-a stopped and rebuilt session from being served stale JVM references;
-the realpath keeps two sf dirs from aliasing and two spellings of one
-dir (trailing slash, symlink) from splitting.
+Key: ``(session, realpath(sf_dir), key)`` where ``key`` names what is
+cached — ``("table", name)``, ``("long", seq_len)``, ``("wide",
+seq_len)`` or ``("plan", name)``.  The session object keeps a stopped
+and rebuilt session from being served stale JVM references, and keeps a
+child session (``session.scoped_session``) from being served frames
+bound to its parent, which Spark would plan under the parent's SQL conf.
+The realpath keeps two sf dirs from aliasing and two
+spellings of one dir (trailing slash, symlink) from splitting.
 
 Fresh QueryExecution: a hit is served as ``hit.select("*")``, a cheap
 clone over the same analyzed relation (no listing, no re-analysis).
@@ -30,14 +32,8 @@ in-session rewrite of ``sf_dir`` would be served the old listing.  No
 registered query writes under an sf_dir: every sink goes through
 ``sf_scoped_dir`` or the artifact publish protocol into scratch roots
 outside the fixture tree (pinned by tests/test_round14_opt.py).  Code
-that regenerates or re-routes a source dir calls :func:`invalidate`
-first — the path-table equivalent of ``REFRESH TABLE``.
-
-At-rest wide routing (``wearable.register_wide_path``) is process-wide
-and keyed ``(realpath(sf_dir), seq_len)``.  A route changes what a
-memoized plan over ``sf_dir`` must read, so registering or dropping one
-goes through the same :func:`invalidate`, and an invalidated dir also
-loses its route: the table at rest was derived from the old data.
+that regenerates a source dir calls :func:`invalidate` first — the
+path-table equivalent of ``REFRESH TABLE``.
 """
 
 from __future__ import annotations
@@ -47,8 +43,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_STORE: dict[tuple[str, str, tuple], DataFrame] = {}
-WIDE_ROUTES: dict[tuple[str, int], str] = {}
+_STORE: dict[tuple[SparkSession, str, tuple], DataFrame] = {}
 
 
 def memoized(
@@ -56,7 +51,7 @@ def memoized(
 ) -> DataFrame:
     """Return the plan memoized for ``(spark, sf_dir, key)`` as a fresh
     clone, or store and return ``build()`` on a miss."""
-    k = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), key)
+    k = (spark, os.path.realpath(sf_dir), key)
     hit = _STORE.get(k)
     if hit is not None:
         return hit.select("*")
@@ -65,10 +60,7 @@ def memoized(
 
 
 def invalidate(sf_dir: str) -> None:
-    """Evict every memoized plan for ``sf_dir`` (all sessions, all keys)
-    and drop its at-rest wide routing."""
+    """Evict every memoized plan for ``sf_dir`` (all sessions, all keys)."""
     rp = os.path.realpath(sf_dir)
     for k in [k for k in list(_STORE) if k[1] == rp]:
         del _STORE[k]
-    for k in [k for k in list(WIDE_ROUTES) if k[0] == rp]:
-        del WIDE_ROUTES[k]

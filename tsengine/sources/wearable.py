@@ -28,12 +28,11 @@ shuffling once on ``user_id``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tsengine.sources.memo import WIDE_ROUTES, invalidate, memoized
+from tsengine.session import ensure_runtime_env
+from tsengine.sources.memo import memoized
 from tsengine.sources.tables import load_table
 
 # Window length used on driver tables: events has ~66 rows/user at every
@@ -95,42 +94,16 @@ def _derive_long(spark: SparkSession, sf_dir: str, seq_len: int) -> DataFrame:
     return out
 
 
-def register_wide_path(sf_dir: str, path: str, seq_len: int = SEQ_LEN) -> None:
-    """Route subsequent ``wearable_wide(spark, sf_dir)`` calls in this
-    process to the materialized table at ``path`` (see
-    :func:`materialize_wide`) — the deployment shape: ETL once, kernels
-    read the materialized layout.  Byte-identical data by construction:
-    the table IS the derivation's output.  Explicit registration (no env
-    var), so nothing can silently serve a path for another scale
-    factor.  Replaces any earlier route for ``sf_dir`` and evicts every
-    plan memoized for it, so already-built queries pick up the route."""
-    invalidate(sf_dir)
-    WIDE_ROUTES[(os.path.realpath(sf_dir), seq_len)] = path
-
-
-def unregister_wide_path(sf_dir: str) -> None:
-    """Undo :func:`register_wide_path` (test/ETL teardown): route
-    ``wearable_wide`` back to the live derivation and evict the plans
-    built while the route was registered, which would otherwise stay
-    pinned to a possibly-deleted path (FileNotFound at action time)."""
-    invalidate(sf_dir)
-
-
 def wearable_wide(spark: SparkSession, sf_dir: str, seq_len: int = SEQ_LEN) -> DataFrame:
     """Wide form: one row per window, time-ordered array columns
     (mirrors the reference's per-window tuples; ``permute_layout`` /
     pivot between layouts is `posexplode` ↔ this collect).
 
-    If :func:`register_wide_path` has routed this (sf_dir, seq_len) to a
-    materialized at-rest table, scan that instead (zero exchanges).
+    Always derived from ``events``; the explicit ETL-once path is
+    :func:`materialize_wide` once, then :func:`read_wide`.
     """
 
     def build() -> DataFrame:
-        at_rest = WIDE_ROUTES.get((os.path.realpath(sf_dir), seq_len))
-        if at_rest is not None:
-            return read_wide(spark, at_rest).select(
-                "patient_id", "window_id", "label", "split", "ibi", "acc"
-            )
         long = wearable_long(spark, sf_dir, seq_len)
         return long.groupBy("patient_id", "window_id", "label", "split").agg(
             F.array_sort(F.collect_list(F.struct("t", "ibi"))).getField("ibi").alias("ibi"),
@@ -186,6 +159,4 @@ def materialize_wide(
 def read_wide(spark: SparkSession, path: str) -> DataFrame:
     """Scan the materialized wide window table (shuffle-free source for
     all per-window operators)."""
-    from tsengine.session import ensure_runtime_env
-
     return ensure_runtime_env(spark).read.parquet(path)

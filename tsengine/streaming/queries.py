@@ -17,14 +17,27 @@ append-mode drain is also complete on a finite input.
 from __future__ import annotations
 
 import itertools
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from tsengine.registry import register
+from tsengine.streaming.stateful import (
+    anomaly_stream,
+    cusum_stream,
+    funnel_stream,
+    ohlc_stream,
+    psi_stream,
+    scd2_stream,
+    user_topk_stream,
+)
 from tsengine.streaming.windows import (
+    dedup_stream,
     interval_join_stream,
     read_events_stream,
     run_available_now,
+    session_stream,
     sliding_stream,
     tumbling_stream,
 )
@@ -32,10 +45,21 @@ from tsengine.streaming.windows import (
 _SINK_IDS = itertools.count()
 
 
-def _drain(df: DataFrame, prefix: str, output_mode: str = "complete") -> DataFrame:
-    # unique per-invocation sink name: repeated runs in one session
-    # (driver harness, oracle sweep, tests) must not collide
-    return run_available_now(df, f"{prefix}_{next(_SINK_IDS)}", output_mode)
+def _drain(
+    spark: SparkSession,
+    sf_dir: str,
+    op: Callable[[DataFrame], DataFrame],
+    prefix: str,
+    output_mode: str = "complete",
+) -> DataFrame:
+    # unique per-invocation sink name: concurrent drains share the
+    # child session's catalog and must not collide
+    return run_available_now(
+        spark,
+        lambda s: op(read_events_stream(s, sf_dir)),
+        f"{prefix}_{next(_SINK_IDS)}",
+        output_mode,
+    )
 
 
 _HOUR = 3600
@@ -59,7 +83,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink) and hash-checked against the same SQL oracle as the batch
     twin `tumbling_window_agg` — the strongest correctness statement
     the engine can make about its streaming path."""
-    return _drain(tumbling_stream(read_events_stream(spark, sf_dir)), "s_tumb")
+    return _drain(spark, sf_dir, tumbling_stream, "s_tumb")
 
 
 @register(
@@ -77,7 +101,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1h/30min windows via the streaming runtime — each event
     belongs to length/slide windows; the oracle performs the same slot
     expansion the batch twin `sliding_window_agg` uses."""
-    return _drain(sliding_stream(read_events_stream(spark, sf_dir)), "s_slide")
+    return _drain(spark, sf_dir, sliding_stream, "s_slide")
 
 
 @register(
@@ -98,11 +122,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming runtime (join state managers + two-sided time bound),
     hash-checked against a plain SQL interval join at microsecond
     precision (both engines see identical us-truncated timestamps)."""
-    return _drain(
-        interval_join_stream(read_events_stream(spark, sf_dir)),
-        "s_ijoin",
-        output_mode="append",
-    )
+    return _drain(spark, sf_dir, interval_join_stream, "s_ijoin", output_mode="append")
 
 
 @register(
@@ -143,9 +163,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the gaps-and-islands SQL sessionizer — the
     streaming twin of the batch `session_window_agg`.  Complete-mode
     drain keeps every merged session on a finite input."""
-    from tsengine.streaming.windows import session_stream
-
-    return _drain(session_stream(read_events_stream(spark, sf_dir)), "s_sess")
+    return _drain(spark, sf_dir, session_stream, "s_sess")
 
 
 @register(
@@ -163,16 +181,14 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain table, which proves each event survived exactly once.  State
     is bounded by the watermark horizon, not the stream length
     (see dedup_stream)."""
-    from tsengine.streaming.windows import dedup_stream
 
-    s = read_events_stream(spark, sf_dir)
-    doubled = s.unionAll(read_events_stream(spark, sf_dir))
-    from pyspark.sql import functions as F
+    def op(events: DataFrame) -> DataFrame:
+        doubled = events.unionAll(read_events_stream(events.sparkSession, sf_dir))
+        return dedup_stream(doubled).select(
+            "event_id", "user_id", "event_type", F.round("value", 6).alias("value")
+        )
 
-    d = dedup_stream(doubled).select(
-        "event_id", "user_id", "event_type", F.round("value", 6).alias("value")
-    )
-    return _drain(d, "s_dedup", output_mode="append")
+    return _drain(spark, sf_dir, op, "s_dedup", output_mode="append")
 
 
 @register(
@@ -219,15 +235,7 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch window plan agree row-for-row.  Stage advancement is
     monotone under the per-user (ts, event_id) arrival contract, so
     late re-emission can only repeat, never regress, a user's stage."""
-    from pyspark.sql import functions as F
-
-    from tsengine.streaming.stateful import funnel_stream
-
-    drained = _drain(
-        funnel_stream(read_events_stream(spark, sf_dir)),
-        "s_funnel",
-        output_mode="update",
-    )
+    drained = _drain(spark, sf_dir, funnel_stream, "s_funnel", output_mode="update")
     per_user = drained.groupBy("user_id").agg(F.max("stage").alias("stage"))
     tot = per_user.agg(
         F.sum(F.when(F.col("stage") >= 1, 1).otherwise(0)).alias("u1"),
@@ -264,15 +272,7 @@ def stream_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The kernel is ``applyInPandasWithState`` (stateful.py); Spark 4's
     ``transformWithStateInPandas`` needs the google.protobuf runtime
     for its state server, which this engine does not require."""
-    from pyspark.sql import functions as F
-
-    from tsengine.streaming.stateful import user_topk_stream
-
-    drained = _drain(
-        user_topk_stream(read_events_stream(spark, sf_dir)),
-        "s_topk",
-        output_mode="update",
-    )
+    drained = _drain(spark, sf_dir, user_topk_stream, "s_topk", output_mode="update")
     best = drained.groupBy("user_id", "rk").agg(
         F.max(F.struct("value", "event_id")).alias("b")
     )
@@ -328,15 +328,7 @@ def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle SELECTs the marker column away; Spark side drops nothing —
     the drained closed intervals ARE the answer."""
-    from pyspark.sql import functions as F
-
-    from tsengine.streaming.stateful import scd2_stream
-
-    drained = _drain(
-        scd2_stream(read_events_stream(spark, sf_dir)),
-        "s_scd2",
-        output_mode="append",
-    )
+    drained = _drain(spark, sf_dir, scd2_stream, "s_scd2", output_mode="append")
     return drained.select(
         "user_id",
         "version",
@@ -378,13 +370,7 @@ def stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rule.  Baseline requires >= 10 priors and positive variance
     (a constant history flags nothing — variance undefined), mirroring
     `mad_outliers`' degenerate-scale guard."""
-    from tsengine.streaming.stateful import anomaly_stream
-
-    return _drain(
-        anomaly_stream(read_events_stream(spark, sf_dir)),
-        "s_anom",
-        output_mode="append",
-    )
+    return _drain(spark, sf_dir, anomaly_stream, "s_anom", output_mode="append")
 
 
 def _stream_psi_oracle() -> str:
@@ -443,13 +429,7 @@ def stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over exact integer counts (no engine-ordered float
     accumulation), 6dp-canonicalized half-away-from-zero on both
     sides."""
-    from tsengine.streaming.stateful import psi_stream
-
-    return _drain(
-        psi_stream(read_events_stream(spark, sf_dir)),
-        "s_psi",
-        output_mode="append",
-    )
+    return _drain(spark, sf_dir, psi_stream, "s_psi", output_mode="append")
 
 
 @register(
@@ -499,13 +479,7 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned-fold recurrence technique of ``ema_smooth``/
     ``cusum_changepoint`` extended to the streaming twin.  O(1) state
     per user (count, sum, sum-of-squares, S)."""
-    from tsengine.streaming.stateful import cusum_stream
-
-    return _drain(
-        cusum_stream(read_events_stream(spark, sf_dir)),
-        "s_cusum",
-        output_mode="append",
-    )
+    return _drain(spark, sf_dir, cusum_stream, "s_cusum", output_mode="append")
 
 
 @register(
@@ -549,10 +523,4 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero float arithmetic anywhere, so streamed bars are bit-exact
     with NO rounding, the strongest determinism class in the streaming
     family."""
-    from tsengine.streaming.stateful import ohlc_stream
-
-    return _drain(
-        ohlc_stream(read_events_stream(spark, sf_dir)),
-        "s_ohlc",
-        output_mode="append",
-    )
+    return _drain(spark, sf_dir, ohlc_stream, "s_ohlc", output_mode="append")

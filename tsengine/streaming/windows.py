@@ -18,19 +18,21 @@ sink_metrics_log).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tsengine.session import ensure_runtime_env, scoped_session
+
 # Shuffle partitions for a drain's state stores (see run_available_now).
 _STATE_PARTITIONS = 8
+_DRAIN_CONFS = {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS)}
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table (schema from the batch
     reader; maxFilesPerTrigger simulates micro-batch arrival)."""
-    from tsengine.session import ensure_runtime_env
-
     ensure_runtime_env(spark)
     raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     # file source requires a directory; glob-filter to the events table
@@ -180,12 +182,17 @@ def interval_join_stream(
 
 
 def run_available_now(
-    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
+    spark: SparkSession,
+    build: Callable[[SparkSession], DataFrame],
+    query_name: str,
+    output_mode: str = "complete",
 ) -> DataFrame:
-    """Drain the stream with Trigger.AvailableNow into a memory sink and
-    return the materialized result (test/driver harness helper).
-    Stateful aggregations drain in ``complete`` mode; join/projection
-    streams have no complete-mode semantics and use ``append``.
+    """Drain ``build(child)`` with Trigger.AvailableNow into a memory sink
+    and return the result, bound to ``child``, the ``scoped_session`` of
+    ``spark`` that sizes state partitions (a frame keeps the session it
+    was built on).  The sink's temp view is dropped once the read-back is
+    analyzed.  Stateful aggregations drain in ``complete`` mode;
+    join/projection streams have no complete-mode semantics: ``append``.
 
     State-partition sizing (r14, guide §2.2 applied to state stores):
     every stateful operator commits one delta file PER (partition,
@@ -195,24 +202,21 @@ def run_available_now(
     (stream_interval_join: 60s of cumulative commit task-time, 8.9s
     wall for KBs of state).  Drains therefore size state partitions by
     state VOLUME: ``_STATE_PARTITIONS`` (8 — still multi-partition, so
-    distribution bugs stay visible) for the drain only, restored after.
-    Hash partitioning by key is unchanged, so results are identical at
-    any setting."""
-    spark = stream_df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {query_name}")
+    distribution bugs stay visible).  Hash partitioning by key is
+    unchanged, so results are identical at any setting."""
+    child = scoped_session(spark, _DRAIN_CONFS)
+    q = (
+        build(child)
+        .writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    out = child.sql(f"SELECT * FROM {query_name}")
+    child.catalog.dropTempView(query_name)
+    return out
 
 
 def metrics_log_sink(stream_df: DataFrame, log: list) -> None:

@@ -41,47 +41,3 @@ def test_bucketed_join_zero_exchange(spark, oracle_sf_dir, bucketed_pair):
     o = load_table(spark, oracle_sf_dir, "orders")
     n_plain = li.join(o, li.l_orderkey == o.o_orderkey).count()
     assert n_bucketed == n_plain > 0
-
-
-def test_ensure_bucketed_recovers_partial_write(spark, oracle_sf_dir, tmp_path):
-    """An interrupted bucketed write (no _SUCCESS marker) must never be
-    silently reused: ensure_bucketed clears the partial directory and
-    rewrites, and a committed copy is re-declared (not rewritten) to a
-    fresh catalog."""
-    import os
-
-    from tsengine.sources.bucketed import ensure_bucketed
-
-    # mirror the production contract: `location` is the managed location
-    # saveAsTable will use, i.e. <db LOCATION>/<table>
-    db = "tsengine_buckets_test"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{tmp_path}'")
-    loc = str(tmp_path / "nation_b")
-    os.makedirs(loc)
-    # fake partial write: files but no _SUCCESS
-    with open(os.path.join(loc, "part-00000_00000.c000.snappy.parquet"), "w") as f:
-        f.write("garbage")
-    name = f"{db}.nation_b"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    ensure_bucketed(spark, oracle_sf_dir, "nation", "n_nationkey", name, loc)
-    n = spark.table(name).count()
-    assert n == 25
-    assert os.path.isfile(os.path.join(loc, "_SUCCESS"))
-
-    # committed copy + empty catalog -> re-declare path (no rewrite).
-    # In production the in-memory catalog simply forgets at session end
-    # with the files intact; DROP TABLE on a managed table would DELETE
-    # them, so save/restore the directory around the drop to simulate a
-    # fresh session.
-    import shutil
-
-    saved = str(tmp_path / "saved")
-    shutil.copytree(loc, saved, copy_function=shutil.copy2)
-    spark.sql(f"DROP TABLE {name}")
-    shutil.move(saved, loc)
-    before = {f: os.path.getmtime(os.path.join(loc, f)) for f in os.listdir(loc)}
-    ensure_bucketed(spark, oracle_sf_dir, "nation", "n_nationkey", name, loc)
-    after = {f: os.path.getmtime(os.path.join(loc, f)) for f in os.listdir(loc)}
-    assert spark.table(name).count() == 25
-    assert after == before, "committed copy must be re-declared, not rewritten"
-    spark.sql(f"DROP TABLE {name}")

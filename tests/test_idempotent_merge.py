@@ -112,7 +112,7 @@ def test_registered_query_is_scoped_to_its_process(spark, sf_dir, monkeypatch):
     its own table, so this process's read-back keeps its files (one
     shared table failed with FAILED_READ_FILE.FILE_NOT_EXIST)."""
     from tsengine.operators.merging import _MERGE_DIR
-    from tsengine.sources.tables import sf_scoped_dir
+    from tsengine.sources.scratch import sf_scoped_dir
 
     mine = idempotent_write_merge(spark, sf_dir)
     expect = {tuple(r) for r in mine.collect()}
@@ -131,28 +131,36 @@ def test_registered_query_is_scoped_to_its_process(spark, sf_dir, monkeypatch):
 _EXIT_SCRIPT = """
 import os, sys
 from tsengine.operators.merging import compact_small_files, idempotent_write_merge
+from tsengine.operators.relational import scan_orc, sink_partitioned
 from tsengine.session import get_spark
 
 spark = get_spark("merge-exit")
 sf_dir = sys.argv[1]
 assert idempotent_write_merge(spark, sf_dir).count() > 0
 assert compact_small_files(spark, sf_dir).count() > 0
+assert scan_orc(spark, sf_dir).count() > 0
+assert sink_partitioned(spark, sf_dir).count() > 0
 print(os.getpid())
-for d in ("TSENGINE_MERGE_DIR", "TSENGINE_COMPACT_DIR"):
+for d in ("TSENGINE_MERGE_DIR", "TSENGINE_COMPACT_DIR", "TSENGINE_ORC_DIR",
+          "TSENGINE_CSV_DIR"):
     print(" ".join(sorted(os.listdir(os.environ[d]))))
 """
 
 
 def test_process_scratch_tables_removed_at_exit(sf_dir, tmp_path):
-    """A process's merge and compaction tables carry its pid and go away
-    when it exits, so runs no longer pile up tables in the scratch dirs."""
+    """A process's merge, compaction and round-trip tables carry its pid
+    and go away when it exits, so runs no longer pile up tables in the
+    scratch dirs."""
     import subprocess
     import sys
 
+    dirs = ("merge", "compact", "orc", "csv")
     env = dict(
         os.environ,
         TSENGINE_MERGE_DIR=str(tmp_path / "merge"),
         TSENGINE_COMPACT_DIR=str(tmp_path / "compact"),
+        TSENGINE_ORC_DIR=str(tmp_path / "orc"),
+        TSENGINE_CSV_DIR=str(tmp_path / "csv"),
         TSENGINE_DRIVER_MEM="1g",
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -161,13 +169,17 @@ def test_process_scratch_tables_removed_at_exit(sf_dir, tmp_path):
         cwd=repo, env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0, run.stderr[-4000:]
-    pid, merge_seen, compact_seen = run.stdout.strip().splitlines()[-3:]
+    pid, merge_seen, compact_seen, orc_seen, csv_seen = (
+        run.stdout.strip().splitlines()[-5:]
+    )
     assert merge_seen.startswith(f"cust_rollup_{pid}_"), merge_seen
     assert {n.rsplit("_", 1)[0] for n in compact_seen.split()} == {
         f"fragments_{pid}", f"compacted_{pid}"
     }, compact_seen
-    assert not os.listdir(tmp_path / "merge")
-    assert not os.listdir(tmp_path / "compact")
+    assert orc_seen.rsplit("_", 1)[0] == f"orders_{pid}", orc_seen
+    assert csv_seen.rsplit("_", 1)[0] == f"events_by_type_{pid}", csv_seen
+    for d in dirs:
+        assert not os.listdir(tmp_path / d), d
 
 
 def test_compact_small_files_contract(spark, oracle_sf_dir):

@@ -1,10 +1,11 @@
 """Keep the engine to what its callers reach.
 
-Two static checks, no Spark session: the hand-kept sample head of the
-registry stays short and leads the query enumeration, and every
-top-level definition in ``tsengine/`` is referenced by name from some
-caller, so an unused helper, kernel copy or constant fails here instead
-of accumulating.
+Static checks, no Spark session: the hand-kept sample head of the
+registry stays short and leads the query enumeration; every top-level
+definition in ``tsengine/`` is referenced by name from some caller, so
+an unused helper, kernel copy or constant fails here instead of
+accumulating; and only ``sources/scratch.py`` holds the protocol that
+reuses, publishes and removes scratch copies.
 """
 
 from __future__ import annotations
@@ -98,3 +99,50 @@ def test_every_engine_definition_is_referenced():
         if all(p == path and first <= ln <= last for p, ln in refs.get(name, []))
     ]
     assert not unreferenced, f"defined in tsengine/ but never named: {unreferenced}"
+
+
+# the one owner of scratch placement, and session.py's content-addressed
+# package zip
+_PATH_OWNERS = ("tsengine/sources/scratch.py", "tsengine/session.py")
+_PATH_CALLS = {("shutil", "rmtree"), ("os", "rename"), ("os", "replace")}
+
+
+def _docstrings(tree: ast.Module) -> set[int]:
+    return {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+
+
+def test_scratch_paths_have_one_owner():
+    """Only ``sources/scratch.py`` decides whether a copy is reusable
+    (``_SUCCESS``, ``st_mtime_ns``), publishes one (``os.rename``,
+    ``os.replace``) or removes one (``shutil.rmtree``); operator code
+    asks it for a path instead of repeating the protocol."""
+    offenders = []
+    for path in _py_files("tsengine"):
+        rel = os.path.relpath(path, REPO)
+        if rel in _PATH_OWNERS:
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        docs = _docstrings(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute):
+                owner = getattr(node.value, "id", None)
+                hit = node.attr == "st_mtime_ns" or (owner, node.attr) in _PATH_CALLS
+            elif isinstance(node, ast.ImportFrom):
+                hit = any((node.module, a.name) in _PATH_CALLS for a in node.names)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                hit = "_SUCCESS" in node.value and id(node) not in docs
+            else:
+                continue
+            if hit:
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"scratch protocol outside sources/scratch.py: {offenders}"

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 import re
 
 from pyspark.sql import functions as F
@@ -20,14 +19,10 @@ def _plan(df) -> str:
 
 
 def _fresh_artifact(spark):
-    """(Re)build the sf0.001 graph artifact and return its path."""
-    from tsengine.operators.similarity import (
-        _knn_graph_path,
-        knn_graph_materialize,
-    )
+    """Build (or reuse) the sf0.001 graph artifact."""
+    from tsengine.operators.similarity import knn_graph_materialize
 
     knn_graph_materialize(spark, SF)
-    return _knn_graph_path(SF, 5)
 
 
 def test_materialized_graph_is_bit_identical_to_live_build(spark):
@@ -46,17 +41,6 @@ def test_materialized_graph_is_bit_identical_to_live_build(spark):
     for a, b in zip(live, mat):
         assert (a.vec_id, a.neighbor_id, a.rank) == (b.vec_id, b.neighbor_id, b.rank)
         assert a.cos == b.cos  # exact, not approx: parquet stores the bits
-
-
-def test_artifact_publish_is_atomic_and_flagged(spark):
-    """The artifact dir must carry parquet's _SUCCESS marker (the
-    cached reader's existence probe) and no temp dir may linger."""
-    path = _fresh_artifact(spark)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    parent = os.path.dirname(path)
-    leaf = os.path.basename(path)
-    stale = [d for d in os.listdir(parent) if d.startswith(f"{leaf}.tmp.")]
-    assert stale == []
 
 
 def test_audits_read_artifact_not_rebuild(spark):
@@ -106,31 +90,6 @@ def test_components_stay_on_live_build_path(spark):
     _fresh_artifact(spark)
     plan = _plan(_knn_mutual_edges(spark, SF))
     assert "FlatMapGroupsInPandas" in plan
-
-
-def test_graph_path_tracks_fixture_mtime(monkeypatch):
-    """A regenerated embeddings fixture must invalidate the cache: the
-    artifact path is keyed by the parquet's NANOSECOND mtime (whole
-    seconds would silently serve a stale graph after a same-second
-    regeneration — ADVICE r11)."""
-    import types
-
-    from tsengine.operators import similarity as sim
-
-    p1 = sim._knn_graph_path(SF, 5)
-    real = os.stat
-
-    def fake(p, *a, **k):
-        if str(p).endswith("embeddings.parquet"):
-            # same whole second as a plausible regen, +1ns
-            return types.SimpleNamespace(
-                st_mtime_ns=real(p, *a, **k).st_mtime_ns + 1
-            )
-        return real(p, *a, **k)
-
-    monkeypatch.setattr(sim.os, "stat", fake)
-    p2 = sim._knn_graph_path(SF, 5)
-    assert p1 != p2
 
 
 def test_curation_v3_semantics(spark):

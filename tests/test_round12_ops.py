@@ -1,112 +1,12 @@
-"""Round-12 contracts: the graph artifact's true-atomic publish +
-superseded-version GC (VERDICT r11 item 3 / ADVICE r11), and the
-incremental curation pipeline's equality with a from-scratch v3 run."""
+"""Round-12 contracts: the incremental curation pipeline's equality
+with a from-scratch v3 run, and the shard manifest.  The graph
+artifact's publish and GC tests live in tests/test_scratch.py."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
 SF = "/root/testdata/sf0.001"
-
-
-def _toy(spark, val):
-    return spark.createDataFrame([(1, val)], "id long, v long")
-
-
-def _leaf(tmp_path, mtag):
-    # the exact leaf shape _knn_graph_path mints: dial prefix, mtime
-    # tag, sf_scoped_dir's 10-hex scale-factor tag
-    return str(tmp_path / f"graph_k10_b8x5_m{mtag}_0123456789")
-
-
-def test_publish_never_deletes_destination_first(spark, tmp_path):
-    """Publishing onto an existing COMPLETE artifact must leave it in
-    place untouched (concurrent-publisher-won semantics): at no point
-    may the destination be absent — the rmtree-before-rename window
-    ADVICE r11 flagged."""
-    from tsengine.operators.similarity import _publish_graph
-
-    path = _leaf(tmp_path, 111)
-    _publish_graph(_toy(spark, 1), path)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    ino = os.stat(path).st_ino
-    _publish_graph(_toy(spark, 2), path)  # loser discards its copy
-    assert os.stat(path).st_ino == ino  # original artifact untouched
-    [row] = spark.read.parquet(path).collect()
-    assert row.v == 1
-    assert not [d for d in os.listdir(tmp_path) if ".tmp." in d]
-
-
-def test_publish_replaces_incomplete_occupant(spark, tmp_path):
-    """An occupant WITHOUT _SUCCESS (crashed legacy layout) is swapped
-    aside-then-in, never leaving the path absent, and the aside copy
-    is removed."""
-    from tsengine.operators.similarity import _publish_graph
-
-    path = _leaf(tmp_path, 222)
-    os.makedirs(path)  # incomplete: no _SUCCESS
-    # non-empty, so the rename cannot trivially replace an empty dir —
-    # the aside-swap branch itself must run (tightened in round 13)
-    open(os.path.join(path, "part-junk"), "w").close()
-    _publish_graph(_toy(spark, 7), path)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    [row] = spark.read.parquet(path).collect()
-    assert row.v == 7
-    assert not [d for d in os.listdir(tmp_path) if ".old." in d or ".tmp." in d]
-
-
-def test_publish_gc_prunes_superseded_mtimes(spark, tmp_path):
-    """Publishing the new-fixture-mtime artifact prunes superseded
-    siblings of the same dial+sf family — exactly one artifact
-    survives (VERDICT r11 missing-item 2) — while a DIFFERENT dial or
-    sf tag is left alone."""
-    from tsengine.operators.similarity import _publish_graph
-
-    old = _leaf(tmp_path, 111)
-    other_dial = str(tmp_path / "graph_k10_b8x6_m111_0123456789")
-    other_sf = str(tmp_path / "graph_k10_b8x5_m111_aaaaaaaaaa")
-    orphan_tmp = old + ".tmp.999999999"  # dead-pid staging leftover
-    for p in (old, other_dial, other_sf):
-        _publish_graph(_toy(spark, 1), p)
-    os.makedirs(orphan_tmp)
-    new = _leaf(tmp_path, 333)
-    _publish_graph(_toy(spark, 2), new)
-    left = sorted(os.listdir(tmp_path))
-    assert os.path.basename(new) in left
-    assert os.path.basename(old) not in left, "superseded artifact must be GC'd"
-    assert os.path.basename(orphan_tmp) not in left, "dead-pid staging dir"
-    assert os.path.basename(other_dial) in left, "different dial: not ours"
-    assert os.path.basename(other_sf) in left, "different sf: not ours"
-
-
-def test_publish_gc_spares_live_writers_staging(spark, tmp_path):
-    """A staging dir owned by a LIVE pid (a concurrent publisher
-    mid-write) must never be GC'd — deleting it would re-introduce the
-    race the publish path exists to close."""
-    from tsengine.operators.similarity import _publish_graph
-
-    path = _leaf(tmp_path, 444)
-    live_tmp = f"{path}.tmp.1"  # pid 1: always alive
-    os.makedirs(live_tmp)
-    _publish_graph(_toy(spark, 1), path)
-    assert os.path.basename(live_tmp) in os.listdir(tmp_path)
-
-
-def test_publish_reraises_unexpected_oserror(spark, tmp_path, monkeypatch):
-    """An unexpected rename failure must surface, not silently discard
-    the build and leave a confusing path-not-found at read time."""
-    from tsengine.operators import similarity as sim
-
-    path = _leaf(tmp_path, 555)
-
-    def boom(src, dst):
-        raise PermissionError(13, "nope")
-
-    monkeypatch.setattr(sim.os, "rename", boom)
-    with pytest.raises(PermissionError):
-        sim._publish_graph(_toy(spark, 1), path)
 
 
 def test_curation_v3_incremental_equals_from_scratch(spark):
@@ -135,18 +35,21 @@ def test_curation_v3_incremental_plan_contract(spark):
     the old-corpus graph instead), no CartesianProduct, and the sample
     stays TakeOrdered."""
     from tsengine.operators.similarity import (
-        _knn_graph_path,
+        _KNN_GRAPH_DIR,
+        _graph_family,
         pipeline_curation_v3_incremental,
     )
+    from tsengine.sources.scratch import artifact_path
 
     df = pipeline_curation_v3_incremental(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan
     # the old-corpus graph arrived via its persisted artifact
-    assert os.path.exists(
-        os.path.join(_knn_graph_path(SF, 5, variant="_old10"), "_SUCCESS")
+    old = artifact_path(
+        _KNN_GRAPH_DIR, SF, _graph_family(5, variant="_old10"), "embeddings"
     )
+    assert os.path.exists(os.path.join(old, "_SUCCESS"))
 
 
 def test_shard_manifest_is_the_global_prefix_sum(spark):

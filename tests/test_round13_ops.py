@@ -1,109 +1,12 @@
 """Round-13 contracts: the curated-release manifest, incremental
-export sharding, the incremental Gopher-gate artifact, and the
-publish-path race fixes (VERDICT r12 items 2-5 / ADVICE r12)."""
+export sharding and the incremental Gopher-gate artifact (VERDICT r12
+items 2-4).  The publish-path race tests live in tests/test_scratch.py."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
 SF = "/root/testdata/sf0.001"
-
-
-def _toy(spark, val):
-    return spark.createDataFrame([(1, val)], "id long, v long")
-
-
-def _leaf(tmp_path, mtag):
-    return str(tmp_path / f"graph_k10_b8x5_m{mtag}_0123456789")
-
-
-# ---------------------------------------------------------------------------
-# publish-path races (ADVICE r12 items 1-2)
-# ---------------------------------------------------------------------------
-
-
-def test_publish_aside_swap_loser_survives(spark, tmp_path, monkeypatch):
-    """Two publishers racing a crashed (no-_SUCCESS) occupant: the
-    loser's rename(path, aside) hits ENOENT because the winner swapped
-    the occupant first.  The loser must retry the main rename and
-    finish the publish (or adopt the winner's complete copy) — never
-    crash with an unhandled FileNotFoundError (ADVICE r12)."""
-    from tsengine.operators import similarity as sim
-
-    path = _leaf(tmp_path, 666)
-    os.makedirs(path)  # incomplete occupant: non-empty, no _SUCCESS
-    open(os.path.join(path, "part-junk"), "w").close()
-    real_rename = os.rename
-    state = {"stolen": False}
-
-    def racing_rename(src, dst):
-        if src == path and not state["stolen"]:
-            # simulate the concurrent winner moving the occupant aside
-            # a beat before us: our own rename then sees ENOENT
-            state["stolen"] = True
-            real_rename(path, f"{path}.old.winner")
-            raise FileNotFoundError(2, "raced", src)
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(sim.os, "rename", racing_rename)
-    sim._publish_graph(_toy(spark, 5), path)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    [row] = spark.read.parquet(path).collect()
-    assert row.v == 5
-    assert not [d for d in os.listdir(tmp_path) if ".tmp." in d]
-
-
-def test_publish_aside_swap_loser_adopts_winner(spark, tmp_path, monkeypatch):
-    """The other interleaving: the loser's final rename(tmp, path)
-    fails ENOTEMPTY because the winner already published a COMPLETE
-    artifact.  The loser must discard its build and return — the
-    winner's artifact survives untouched."""
-    from tsengine.operators import similarity as sim
-
-    path = _leaf(tmp_path, 777)
-    os.makedirs(path)  # incomplete occupant: non-empty, no _SUCCESS
-    open(os.path.join(path, "part-junk"), "w").close()
-    real_rename = os.rename
-
-    winner_tmp = f"{path}.tmp.1"  # a DIFFERENT pid's staging dir
-    _toy(spark, 9).write.parquet(winner_tmp)
-
-    def racing_rename(src, dst):
-        if src == path:
-            # winner swaps the occupant away AND publishes, all before
-            # our aside-swap runs: our rename(path, aside) ENOENTs ...
-            real_rename(path, f"{path}.old.winner")
-            real_rename(winner_tmp, path)
-            raise FileNotFoundError(2, "raced", src)
-        return real_rename(src, dst)  # ... and rename(tmp, path) ENOTEMPTYs
-
-    monkeypatch.setattr(sim.os, "rename", racing_rename)
-    sim._publish_graph(_toy(spark, 5), path)
-    [row] = spark.read.parquet(path).collect()
-    assert row.v == 9, "winner's complete artifact must survive"
-    assert not [d for d in os.listdir(tmp_path) if ".tmp." in d]
-
-
-def test_gc_spares_live_staging_of_superseded_leaf(spark, tmp_path):
-    """A LIVE pid's staging dir targeting a SUPERSEDED-mtime leaf (a
-    long-lived concurrent session that computed its path from the
-    pre-regeneration fixture) must survive GC — only the superseded
-    ARTIFACT itself is pruned (ADVICE r12 item 2)."""
-    from tsengine.operators.similarity import _publish_graph
-
-    old = _leaf(tmp_path, 111)
-    live_old_staging = f"{old}.tmp.1"  # pid 1: always alive
-    dead_old_staging = f"{old}.tmp.999999999"
-    _publish_graph(_toy(spark, 1), old)
-    os.makedirs(live_old_staging)
-    os.makedirs(dead_old_staging)
-    _publish_graph(_toy(spark, 2), _leaf(tmp_path, 333))
-    left = os.listdir(tmp_path)
-    assert os.path.basename(old) not in left, "superseded artifact pruned"
-    assert os.path.basename(live_old_staging) in left, "live writer spared"
-    assert os.path.basename(dead_old_staging) not in left, "dead pid pruned"
 
 
 # ---------------------------------------------------------------------------
@@ -136,14 +39,17 @@ def test_incremental_gate_plan_contract(spark):
     is replaced by the persisted flag artifact (VERDICT r12 item 4).
     Checked on the whole incremental pipeline's executed plan."""
     from tsengine.operators.similarity import (
-        _gate_flags_path,
+        _GATE_FLAGS_FAMILY,
+        _KNN_GRAPH_DIR,
         pipeline_curation_v3_incremental,
     )
+    from tsengine.sources.scratch import artifact_path
 
     df = pipeline_curation_v3_incremental(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
+    flags = artifact_path(_KNN_GRAPH_DIR, SF, _GATE_FLAGS_FAMILY, "documents")
     assert os.path.exists(
-        os.path.join(_gate_flags_path(SF), "_SUCCESS")
+        os.path.join(flags, "_SUCCESS")
     ), "gate-flag artifact must exist after a run"
     assert "gateflags_old10" in plan, "gate must read the flag artifact"
     # every documents scan that reads `text` serves the gopher

@@ -47,7 +47,7 @@ def test_scratch_roots_outside_fixture_tree():
     """Static half of the invariant: every scratch-root default in the
     engine lives outside /root/testdata, and sf_scoped_dir can never
     relocate an output INTO the sf_dir it tags."""
-    from tsengine.sources.tables import sf_scoped_dir
+    from tsengine.sources.scratch import sf_scoped_dir
 
     roots = []
     for dirpath, _d, files in os.walk(_TSENGINE_ROOT):

@@ -65,10 +65,10 @@ def main() -> int:
     rows = df.collect()
     print(f"result rows: {len(rows)} -> {sorted(r['event_type'] for r in rows)}")
 
-    csv_dir = os.environ.get("TSENGINE_CSV_DIR", "/tmp/tsengine_csv")
-    copies = [d for d in os.listdir(csv_dir) if d.startswith("events_dpp_")]
-    assert len(copies) == 1, copies
-    root = os.path.join(csv_dir, copies[0])
+    from tsengine.operators.relational import _CSV_DIR
+    from tsengine.sources.scratch import artifact_path
+
+    root = artifact_path(_CSV_DIR, tier, "events_dpp", "events")
     parts_on_disk = [d for d in os.listdir(root) if d.startswith("event_type=")]
     files_on_disk = sum(
         1

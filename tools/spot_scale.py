@@ -324,8 +324,9 @@ _TAIL_NOTES = {
     "volume grows with the tier's perturbed near-dup copies — the "
     "minhash_containment output-volume class",
     "knn_graph_materialize": "eager-bound like bucketed_join_agg: the "
-    "full LSH build + parquet publish run at fn-build (cost in the "
-    "wall line, same class as knn_join_lsh's row), so the timed row "
+    "full LSH build + parquet publish run at the first fn-build for a "
+    "fixture (cost in the wall line, same class as knn_join_lsh's "
+    "row; later builds reuse the committed copy), so the timed row "
     "is the artifact read-back the six audits now amortize",
     "knn_triangle_count": "reads the materialized graph artifact "
     "since r11; the two-path + closing-edge join grows with the "

@@ -34,32 +34,18 @@ Delta/Iceberg/Hudi re-expressed over vanilla partitioned parquet.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.scratch import process_dir
+from tsengine.sources.tables import load_table
 
 _MERGE_DIR = os.environ.get("TSENGINE_MERGE_DIR", "/tmp/tsengine_merge")
 _N_PARTS = 8
 _SPLIT_DATE = "1999-01-01"
-_OWN_DIRS: set[str] = set()
-
-
-def process_dir(base: str, sf_dir: str, leaf: str) -> str:
-    """This process's scratch table under ``base``, removed when the
-    process exits.  The queries below overwrite theirs on every call, so
-    two processes on one sf_dir must not share one; the read-back frames
-    are lazy, so the table must outlive the call."""
-    path = sf_scoped_dir(base, sf_dir, f"{leaf}_{os.getpid()}")
-    if path not in _OWN_DIRS:
-        _OWN_DIRS.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 def _rollup(orders: DataFrame) -> DataFrame:

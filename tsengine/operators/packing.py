@@ -37,13 +37,12 @@ HALF_UP-vs-double boundary risk) and the same left fold for the MSE
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.scratch import artifact
+from tsengine.sources.tables import load_table
 
 _CHUNK_W = 32  # chunk width, whitespace tokens
 _CHUNK_S = 24  # chunk stride (overlap = W - S = 8)
@@ -302,7 +301,11 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     belongs to the shard its first token lands in.  All-BIGINT
     arithmetic including the shard id (``div`` / ``//``, never
     floor-of-double) — exact in both engines at any token count."""
-    docs = load_table(spark, sf_dir, "documents")
+    return _manifest(spark, load_table(spark, sf_dir, "documents"))
+
+
+def _manifest(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """The shard manifest of ``docs`` as one doc_id-ordered stream."""
     n = F.size(F.split("text", " "))
     base = docs.select("doc_id", "source", n.cast("long").alias("n_tokens"))
     out, _ = _global_stream_offsets(spark, base)
@@ -320,46 +323,27 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _manifest_path(sf_dir: str) -> str:
-    """Artifact path for the persisted old-corpus manifest, keyed like
-    the graph artifact (similarity._knn_graph_path): sf tag, every
-    manifest dial (the split modulus and the shard budget) and the
-    DOCUMENTS fixture's nanosecond mtime, so a regenerated fixture
-    invalidates the cache instead of silently serving stale offsets."""
-    from tsengine.operators.similarity import _INC_MOD, _KNN_GRAPH_DIR
-
-    mt = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    leaf = f"manifest_old{_INC_MOD}_b{_SHARD_B}_m{mt}"
-    return sf_scoped_dir(_KNN_GRAPH_DIR, sf_dir, leaf)
-
-
 def _old_manifest_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The OLD-corpus (doc_id % mod != 0) shard manifest, read from
     its persisted artifact — built on first use with the identical
     two-level prefix scan as :func:`shard_manifest` restricted to the
-    old corpus, published via the shared atomic-rename protocol
-    (similarity._publish_graph, its GC covering the manifest leaf
-    family)."""
-    from tsengine.operators.similarity import _INC_MOD, _publish_graph
+    old corpus, and keyed by every manifest dial (the split modulus
+    and the shard budget) and the documents fixture
+    (``scratch.artifact``)."""
+    from tsengine.operators.similarity import _INC_MOD, _KNN_GRAPH_DIR
 
-    path = _manifest_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % _INC_MOD != 0
-        )
-        n = F.size(F.split("text", " "))
-        base = docs.select("doc_id", "source", n.cast("long").alias("n_tokens"))
-        out, _ = _global_stream_offsets(spark, base)
-        _publish_graph(
-            out.select(
-                "doc_id",
-                "source",
-                "n_tokens",
-                "tok_offset",
-                F.expr(_SHARD_ID).alias("shard_id"),
-            ),
-            path,
-        )
+    def write(tmp: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        old = docs.filter(F.col("doc_id") % _INC_MOD != 0)
+        _manifest(spark, old).write.mode("overwrite").parquet(tmp)
+
+    path = artifact(
+        _KNN_GRAPH_DIR,
+        sf_dir,
+        f"manifest_old{_INC_MOD}_b{_SHARD_B}",
+        ("documents",),
+        write,
+    )
     return spark.read.parquet(path)
 
 

@@ -16,7 +16,8 @@ from pyspark.sql import types as T
 
 from tsengine.oracle.frags import SUP_METRICS_CTE, UNSUP_METRICS_CTE, with_ctes
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.scratch import artifact, process_dir
+from tsengine.sources.tables import load_table
 from tsengine.sources.wearable import wearable_long, wearable_wide
 
 # ---------------------------------------------------------------------------
@@ -122,7 +123,7 @@ def scan_csv_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric table to CSV and reads it back with an explicit schema; the
     oracle recomputes the same table directly — verifying round-trip
     fidelity of the sink."""
-    out = sf_scoped_dir(_CSV_DIR, sf_dir, "unsup_metrics")
+    out = process_dir(_CSV_DIR, sf_dir, "unsup_metrics")
     df = unsup_metrics(spark, sf_dir).select(
         F.col("n_epochs").cast("int"),
         "model",
@@ -165,7 +166,7 @@ def sink_csv_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaped metric table to a header CSV and reads it back with an
     explicit schema; the oracle recomputes the table directly, so a
     hash match proves the sink loses nothing (types, header, values)."""
-    out = sf_scoped_dir(_CSV_DIR, sf_dir, "sup_metrics")
+    out = process_dir(_CSV_DIR, sf_dir, "sup_metrics")
     df = sup_metrics(spark, sf_dir).select(
         F.col("n_epochs").cast("int"),
         "model",
@@ -203,7 +204,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the JSON sink+scan is lossless (ids, strings, md5 of the
     full text).  NDJSON is line-splittable — at 100 TB each file chunk
     scans in parallel exactly like the CSV/parquet paths."""
-    out = sf_scoped_dir(_JSON_DIR, sf_dir, "documents")
+    out = process_dir(_JSON_DIR, sf_dir, "documents")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -242,7 +243,7 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically.  XML files split per row tag, so chunked parallel
     scan behaves like the NDJSON path at 100 TB (row-tag framing is
     the XML analog of NDJSON's line framing)."""
-    out = sf_scoped_dir(_XML_DIR, sf_dir, "orders")
+    out = process_dir(_XML_DIR, sf_dir, "orders")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
@@ -271,7 +272,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (int64, double, strings).  ORC stripes are splittable and carry
     min/max indexes, so pushdown and parallel scan behave like the
     parquet path at 100 TB."""
-    out = sf_scoped_dir(_ORC_DIR, sf_dir, "orders")
+    out = process_dir(_ORC_DIR, sf_dir, "orders")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
@@ -595,16 +596,11 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching directory (PartitionFilters in the scan; pinned by the plan
     contract test) so the query touches 1/5 of the files — then
     aggregates.  The oracle recomputes from the source table directly:
-    a hash match proves the partitioned round trip loses nothing."""
-    import hashlib
-
+    a hash match proves the partitioned round trip loses nothing.  The
+    write happens eagerly at plan-build time, into this process's own
+    table (``scratch.process_dir``)."""
     ev = load_table(spark, sf_dir, "events")
-    # key the sink on a digest of the FULL sf_dir (two roots sharing a
-    # basename, or concurrent runs over them, must not race on the same
-    # mode('overwrite') directory); note the write happens eagerly here
-    # at plan-build time
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    out = os.path.join(_CSV_DIR, f"events_by_type_{tag}")
+    out = process_dir(_CSV_DIR, sf_dir, "events_by_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "purchase")
     return back.groupBy("user_id").agg(
@@ -638,46 +634,24 @@ def dpp_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lever for star-schema layouts (date/tenant/type-partitioned event
     tables).  Pinned by tests/test_plan_contracts.py.
 
-    The partitioned at-rest copy is written eagerly at plan-build time
-    (the `sink_partitioned` layout); the oracle recomputes from the
-    source table directly — a hash match proves both the round trip and
-    the pruned join lose nothing.  DPP is on by default
+    The partitioned at-rest copy (the `sink_partitioned` layout) is a
+    shared artifact keyed by the events fixture (``scratch.artifact``):
+    written once, at the first plan build, and reused by every later
+    call and process.  The oracle recomputes from the source table
+    directly — a hash match proves both the round trip and the pruned
+    join lose nothing.  DPP is on by default
     (``spark.sql.optimizer.dynamicPartitionPruning.enabled``) — no conf
     scoping needed, unlike the size-gated bloom rewrite."""
-    import hashlib
-
     ev = load_table(spark, sf_dir, "events")
-    # key the copy on a CONTENT fingerprint of the source (path + every
-    # file's name/size/mtime): repeat calls in a sweep reuse the copy,
-    # while regenerated testdata gets a fresh directory — a stale
-    # at-rest copy can never silently diverge from the oracle's source
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    h = hashlib.md5(src.encode())
-    paths = (
-        [os.path.join(r, f) for r, _d, fs in sorted(os.walk(src)) for f in sorted(fs)]
-        if os.path.isdir(src)
-        else [src]
+    out = artifact(
+        _CSV_DIR,
+        sf_dir,
+        "events_dpp",
+        ("events",),
+        lambda tmp: ev.write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(tmp),
     )
-    for p in paths:
-        st = os.stat(p)
-        h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    out = os.path.join(_CSV_DIR, f"events_dpp_{h.hexdigest()[:12]}")
-    # reuse only a COMMITTED copy (_SUCCESS marker): an interrupted prior
-    # write must not be silently reused.  Write to a temp dir and
-    # atomically rename on success; prune stale copies of older
-    # fingerprints so _CSV_DIR doesn't accumulate unboundedly.
-    import shutil
-
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        tmp = out + ".inprogress"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-        os.replace(tmp, out)
-    for d in os.listdir(_CSV_DIR):
-        p = os.path.join(_CSV_DIR, d)
-        if d.startswith("events_dpp_") and p != out:
-            shutil.rmtree(p, ignore_errors=True)
     fact = spark.read.parquet(out)
     dim = (
         ev.groupBy("event_type")
@@ -728,38 +702,19 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pipeline's biggest recurring shuffle becomes a one-time storage
     layout decision.
 
-    The bucketed at-rest copies are managed tables written eagerly at
-    plan-build time into a /tmp-located database (content-fingerprinted
-    names; in-session reuse via the catalog).  The oracle recomputes
-    the same join+agg from the raw parquet — a hash match proves the
-    bucketed round trip loses nothing."""
-    import hashlib
-
+    The bucketed at-rest copies are shared artifacts keyed by their
+    fixture tables (``sources/bucketed.ensure_bucketed``): written once,
+    at the first plan build, and declared to each session's catalog
+    from then on.  The oracle recomputes the same join+agg from the raw
+    parquet — a hash match proves the bucketed round trip loses
+    nothing."""
     from tsengine.sources.bucketed import bucketed_join, ensure_bucketed
 
-    h = hashlib.md5(os.path.abspath(sf_dir).encode())
-    for t in ("lineitem", "orders"):
-        src = os.path.join(os.path.abspath(sf_dir), f"{t}.parquet")
-        paths = (
-            [os.path.join(r, f) for r, _d, fs in sorted(os.walk(src)) for f in sorted(fs)]
-            if os.path.isdir(src)
-            else [src]
-        )
-        for p in paths:
-            st = os.stat(p)
-            h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    fp = h.hexdigest()[:10]
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {_BUCKET_DB} LOCATION '{_BUCKET_DIR}'"
+    li_t = ensure_bucketed(
+        spark, sf_dir, "lineitem", "l_orderkey", _BUCKET_DB, _BUCKET_DIR
     )
-    li_t, o_t = f"{_BUCKET_DB}.li_{fp}", f"{_BUCKET_DB}.o_{fp}"
-    ensure_bucketed(
-        spark, sf_dir, "lineitem", "l_orderkey", li_t,
-        os.path.join(_BUCKET_DIR, f"li_{fp}"),
-    )
-    ensure_bucketed(
-        spark, sf_dir, "orders", "o_orderkey", o_t,
-        os.path.join(_BUCKET_DIR, f"o_{fp}"),
+    o_t = ensure_bucketed(
+        spark, sf_dir, "orders", "o_orderkey", _BUCKET_DB, _BUCKET_DIR
     )
     j = bucketed_join(
         spark, li_t, o_t, F.col("l_orderkey") == F.col("o_orderkey")

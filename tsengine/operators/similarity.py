@@ -17,10 +17,7 @@ ranking, with vec_id tie-breaks, so ranks agree across engines.
 
 from __future__ import annotations
 
-import errno
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -28,7 +25,8 @@ from pyspark.sql import functions as F
 from tsengine.operators.dedup import _md5_int
 from tsengine.operators.graph import hash_min_components
 from tsengine.registry import register
-from tsengine.sources.tables import load_table, sf_scoped_dir
+from tsengine.sources.scratch import artifact
+from tsengine.sources.tables import load_table
 
 _DIM = 64
 TOP_K = 5
@@ -940,159 +938,38 @@ def _knn_candidates(
 _KNN_GRAPH_DIR = os.environ.get("TSENGINE_KNN_DIR", "/tmp/tsengine_knn")
 
 
-def _knn_graph_path(sf_dir: str, n_bits: int, variant: str = "") -> str:
-    """Artifact path for the materialized ranked graph, keyed by scale
-    factor (sf_scoped_dir's md5 tag), every graph dial, AND the
-    embeddings fixture's nanosecond mtime — a regenerated fixture
-    invalidates the cache instead of silently serving a graph of stale
-    vectors (``st_mtime_ns``, not whole-second ``getmtime``: a
-    same-second regeneration with different data must still miss).
-    ``variant`` keys sub-corpus artifacts (knn_graph_update's
-    old-corpus index)."""
-    mt = os.stat(os.path.join(sf_dir, "embeddings.parquet")).st_mtime_ns
-    leaf = f"graph{variant}_k{TOP_K}_b{N_BANDS}x{n_bits}_m{mt}"
-    return sf_scoped_dir(_KNN_GRAPH_DIR, sf_dir, leaf)
-
-
-# leaf shape produced by _knn_graph_path (and the packing/gate-flag
-# artifacts that reuse the publish protocol), split into (prefix,
-# mtime tag, sf tag): superseded artifacts share prefix+sf but not
-# mtime.  Alternation, not a wildcard: GC must never match a leaf
-# family the publish path didn't mint.
-_GRAPH_LEAF_RE = re.compile(
-    r"^((?:graph|manifest|gateflags).*_m)(\d+)(_[0-9a-f]{10})$"
-)
-
-
-def _gc_graph_artifacts(path: str) -> None:
-    """Prune superseded siblings of a just-published artifact: same
-    graph/dial prefix and sf tag but a different (older-fixture) mtime
-    tag, plus any orphaned ``*.tmp.<pid>`` / ``*.old.<pid>`` staging
-    dirs for this leaf family.  Keyed-by-mtime caching means every
-    fixture regeneration mints a new directory; without GC the
-    superseded ones strand forever (ADVICE r11).  Only called after a
-    successful publish, so no reader can ever observe a PARTIAL write.
-    A concurrent long-lived session still scanning a superseded path
-    (its path was computed from the pre-regeneration fixture mtime)
-    CAN fail mid-read with a FileNotFoundException (ADVICE r12) — a
-    loud task error, never wrong data; its retry recomputes the path
-    from the current fixture and rebuilds.  That trade is deliberate:
-    an age-gated GC would leave corpus-sized artifacts stranded for
-    the grace window on every fixture regeneration."""
-    parent, leaf = os.path.dirname(path), os.path.basename(path)
-    m = _GRAPH_LEAF_RE.match(leaf)
-    if not m:  # unexpected shape: never guess at deletions
-        return
-    prefix, _, sftag = m.groups()
-    try:
-        siblings = os.listdir(parent)
-    except OSError:
-        return
-    for d in siblings:
-        if d == leaf:
-            continue
-        base = d.split(".tmp.")[0].split(".old.")[0]
-        sm = _GRAPH_LEAF_RE.match(base)
-        if not sm or sm.group(1) != prefix or sm.group(3) != sftag:
-            continue
-        if d != base and not _staging_pid_dead(d):
-            # a LIVE process's staging dir — for ANY leaf of the
-            # family, not just the one we published: a long-lived
-            # concurrent session may be mid-write to a superseded-
-            # mtime leaf (its path was computed from the
-            # pre-regeneration fixture), and rmtree under it would
-            # crash that writer at its rename (ADVICE r12)
-            continue
-        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-
-
-def _staging_pid_dead(dirname: str) -> bool:
-    """True iff ``dirname`` is a ``*.tmp.<pid>`` / ``*.old.<pid>``
-    staging dir whose owning process no longer exists (safe to GC)."""
-    tail = dirname.rsplit(".", 1)[-1]
-    if not tail.isdigit():
-        return False
-    try:
-        os.kill(int(tail), 0)
-    except ProcessLookupError:
-        return True
-    except OSError:
-        return False  # EPERM etc: process exists (or unknowable) — keep
-    return False
-
-
-def _publish_graph(df: DataFrame, path: str) -> None:
-    """Atomic artifact publish: write to a pid-suffixed temp dir, one
-    ``os.rename`` into place.  The destination is NEVER deleted first
-    (ADVICE r11: rmtree-then-rename left a window where a concurrent
-    reader saw an absent artifact): a rename onto an existing complete
-    artifact fails with EEXIST/ENOTEMPTY, which means a concurrent
-    publisher already won with the identical (deterministic build)
-    copy — ours is discarded; an existing INCOMPLETE occupant (no
-    _SUCCESS: a legacy or crashed layout) is renamed aside and only
-    removed after the new artifact is in place, so readers observe the
-    old-complete or new-complete state, never an empty path.
-    Unexpected OSErrors re-raise instead of silently discarding the
-    build.  Successful publish prunes superseded-mtime siblings
-    (:func:`_gc_graph_artifacts`)."""
-    tmp = f"{path}.tmp.{os.getpid()}"
-    df.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError as exc:
-        if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # concurrent publisher won; builds are deterministic so the
-            # occupant is bit-identical — discard ours
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            # crashed/legacy occupant (no _SUCCESS): swap it aside and
-            # move ours in.  TWO publishers can reach this branch at
-            # once (ADVICE r12): the loser's rename(path, aside) races
-            # ENOENT (the winner swapped the occupant first), and its
-            # final rename races EEXIST/ENOTEMPTY (the winner already
-            # published a complete copy).  Both interleavings end with
-            # a complete artifact in place, so the loser discards its
-            # build; any other failure re-raises.
-            aside = f"{path}.old.{os.getpid()}"
-            try:
-                os.rename(path, aside)
-            except FileNotFoundError:
-                aside = None  # concurrent publisher swapped it first
-            try:
-                os.rename(tmp, path)
-            except OSError as exc2:
-                if exc2.errno not in (
-                    errno.EEXIST,
-                    errno.ENOTEMPTY,
-                ) or not os.path.exists(os.path.join(path, "_SUCCESS")):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)  # winner published
-            if aside is not None:
-                shutil.rmtree(aside, ignore_errors=True)
-    _gc_graph_artifacts(path)
+def _graph_family(n_bits: int, variant: str = "") -> str:
+    """Artifact family of a ranked graph: every graph dial, plus
+    ``variant`` for sub-corpus graphs (knn_graph_update's old-corpus
+    index).  The artifact key adds the embeddings fixture's tag."""
+    return f"graph{variant}_k{TOP_K}_b{N_BANDS}x{n_bits}"
 
 
 def _knn_graph_cached(
     spark: SparkSession, sf_dir: str, n_bits: int = N_BITS
 ) -> DataFrame:
-    """The ranked kNN graph, read from the materialized artifact —
-    built on first use via :func:`knn_graph_materialize`.  All graph
-    AUDITS (hubness, label vote, SNN, assortativity, PageRank,
-    triangles) read this instead of re-running the LSH build: in
-    production the graph is the persisted asset and audits are cheap
-    reads; locally this cuts four-plus redundant ~30-40s builds per
-    audit pass at the 100x tier.  ``knn_components`` stays on the live
-    build path so the end-to-end composition remains exercised.
+    """The ranked kNN graph, read from its shared artifact
+    (``scratch.artifact``: built by :func:`knn_join_lsh` on first use,
+    keyed by the embeddings fixture).  All graph AUDITS (hubness, label
+    vote, SNN, assortativity, PageRank, triangles) read this instead of
+    re-running the LSH build: in production the graph is the persisted
+    asset and audits are cheap reads; locally this cuts four-plus
+    redundant ~30-40s builds per audit pass at the 100x tier.
+    ``knn_components`` stays on the live build path so the end-to-end
+    composition remains exercised.
 
     Parquet roundtrip is value-exact (doubles are stored bit-for-bit),
     so every consumer's oracle — which recomputes the graph from the
     CTEs — still hash-matches."""
-    path = _knn_graph_path(sf_dir, n_bits)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        return knn_graph_materialize(spark, sf_dir, n_bits)
+    path = artifact(
+        _KNN_GRAPH_DIR,
+        sf_dir,
+        _graph_family(n_bits),
+        ("embeddings",),
+        lambda tmp: knn_join_lsh(spark, sf_dir, n_bits=n_bits)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
@@ -1109,17 +986,14 @@ def knn_graph_materialize(
     build; its many consumers are skinny reads, so rebuilding per
     audit multiplies the dominant cost by the audit count for nothing).
     Returns the read-back graph so the registered query verifies the
-    ARTIFACT, not the in-flight plan.
-
-    Publish protocol: :func:`_publish_graph` (atomic staged rename).
+    ARTIFACT, not the in-flight plan; a committed copy for the current
+    embeddings fixture is reused (:func:`_knn_graph_cached`).
 
     100 TB shape: the build is :func:`knn_join_lsh` unchanged (its
     scale analysis applies); the write adds one pass over the skinny
     ranked graph ({TOP_K} rows x 4 cols per vector — parquet output is
     a small multiple of the vec_id column, never vectors)."""
-    path = _knn_graph_path(sf_dir, n_bits)
-    _publish_graph(knn_join_lsh(spark, sf_dir, n_bits=n_bits), path)
-    return spark.read.parquet(path)
+    return _knn_graph_cached(spark, sf_dir, n_bits)
 
 
 # ---------------------------------------------------------------------------
@@ -1210,9 +1084,12 @@ def _knn_old_graph_cached(
     from its own artifact — the persisted index a daily-ingest
     pipeline maintains; built on first use with the identical plan as
     :func:`knn_join_lsh` restricted to the old corpus."""
-    path = _knn_graph_path(sf_dir, n_bits, variant=f"_old{_INC_MOD}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        old = _rank_topk(
+    path = artifact(
+        _KNN_GRAPH_DIR,
+        sf_dir,
+        _graph_family(n_bits, variant=f"_old{_INC_MOD}"),
+        ("embeddings",),
+        lambda tmp: _rank_topk(
             _knn_candidates(
                 spark,
                 sf_dir,
@@ -1220,29 +1097,24 @@ def _knn_old_graph_cached(
                 id_filter=F.col("vec_id") % _INC_MOD != 0,
             )
         )
-        _publish_graph(old, path)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
-def _gate_flags_path(sf_dir: str) -> str:
-    """Artifact path for the persisted old-corpus Gopher gate flags,
-    keyed like the graph artifact: sf tag + the DOCUMENTS fixture's
-    nanosecond mtime (the flags are a pure function of document text,
-    so a regenerated fixture is the only invalidation event)."""
-    mt = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    leaf = f"gateflags_old{_INC_MOD}_m{mt}"
-    return sf_scoped_dir(_KNN_GRAPH_DIR, sf_dir, leaf)
+_GATE_FLAGS_FAMILY = f"gateflags_old{_INC_MOD}"
 
 
 def _gate_flags_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The gate-pass doc_id set for the INCREMENTAL curation path
     (VERDICT r12 item 4): old-corpus (doc_id % {_INC_MOD} != 0) flags
-    come from a persisted per-doc artifact — built once via the shared
-    publish protocol — and only the NEW ingest batch pays the Gopher
-    feature projection (a filtered documents scan).  The gate is a
-    deterministic pure per-doc function, so artifact ∪ new-batch is
-    row-identical to the live full-corpus computation and every
-    consumer's oracle is unchanged.
+    come from a persisted per-doc artifact — built once, keyed by the
+    documents fixture (``scratch.artifact``) — and only the NEW ingest
+    batch pays the Gopher feature projection (a filtered documents
+    scan).  The gate is a deterministic pure per-doc function, so
+    artifact ∪ new-batch is row-identical to the live full-corpus
+    computation and every consumer's oracle is unchanged.
 
     100 TB shape: the re-run path's only text-reading corpus work is
     the new batch's codegen projection; the artifact read is a skinny
@@ -1252,19 +1124,20 @@ def _gate_flags_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsengine.operators.text import _gopher_flags
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _gate_flags_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        old = (
-            _gopher_flags(docs.filter(F.col("doc_id") % _INC_MOD != 0))
-            .filter(F.col("keep") == 1)
-            .select("doc_id")
-        )
-        _publish_graph(old, path)
-    new = (
-        _gopher_flags(docs.filter(F.col("doc_id") % _INC_MOD == 0))
-        .filter(F.col("keep") == 1)
-        .select("doc_id")
+
+    def passing(batch):
+        return _gopher_flags(batch).filter(F.col("keep") == 1).select("doc_id")
+
+    path = artifact(
+        _KNN_GRAPH_DIR,
+        sf_dir,
+        _GATE_FLAGS_FAMILY,
+        ("documents",),
+        lambda tmp: passing(docs.filter(F.col("doc_id") % _INC_MOD != 0))
+        .write.mode("overwrite")
+        .parquet(tmp),
     )
+    new = passing(docs.filter(F.col("doc_id") % _INC_MOD == 0))
     return spark.read.parquet(path).unionByName(new)
 
 

@@ -60,16 +60,13 @@ def tokenize_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pos += 1
 
     # register for the SQL lateral-join syntax (the natural UDTF call
-    # site); view name is derived from sf_dir so concurrent or
-    # interleaved multi-sf use can never bind the wrong dataset
-    import hashlib
-
-    view = f"_udtf_docs_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(view)
+    # site); the documents frame is bound as a parameter, whose temp view
+    # PySpark drops once the query is analyzed
     spark.udtf.register("tsengine_tokenize", Tokenize)
     return spark.sql(
-        f"SELECT t.doc_id, t.pos, t.token "
-        f"FROM {view}, LATERAL tsengine_tokenize(doc_id, text) t"
+        "SELECT t.doc_id, t.pos, t.token "
+        "FROM {docs}, LATERAL tsengine_tokenize(doc_id, text) t",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -9,14 +9,17 @@ recurring cost of the pipeline's biggest shuffle into a one-time
 storage layout decision, exactly how production warehouses co-locate
 fact tables.
 
-Bucketed tables are *managed* tables (``bucketBy`` requires
-``saveAsTable``); the session pins the warehouse to a scratch dir.
+``bucketBy`` requires ``saveAsTable``: the registered query's copies
+are external tables over shared artifacts (:func:`ensure_bucketed`).
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
+from tsengine.sources.scratch import artifact
 from tsengine.sources.tables import load_table
 
 # sized to the local test box (32 cores -> 32-way join parallelism, one
@@ -26,22 +29,28 @@ N_BUCKETS = 32
 
 
 def write_bucketed(
-    spark: SparkSession, sf_dir: str, table: str, key: str, name: str | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    key: str,
+    name: str | None = None,
+    path: str | None = None,
 ) -> str:
-    """Write one driver table bucketed+sorted by ``key``; returns the
-    managed-table name.  Idempotent (overwrite)."""
+    """Write one driver table bucketed+sorted by ``key`` as the catalog
+    table ``name`` (external at ``path`` when given, else managed);
+    returns the name.  Idempotent (overwrite)."""
     name = name or f"{table}_bucketed"
     df = load_table(spark, sf_dir, table)
     # one file per bucket (pre-cluster the write on the bucket key):
     # join parallelism == bucket count, and a single sorted run per
     # bucket keeps the join-side in-partition sorts cheap.
-    (
+    w = (
         df.repartition(N_BUCKETS, key)
         .write.mode("overwrite")
         .bucketBy(N_BUCKETS, key)
         .sortBy(key)
-        .saveAsTable(name)
     )
+    (w.option("path", path) if path else w).saveAsTable(name)
     return name
 
 
@@ -64,21 +73,26 @@ def bucketed_join(spark: SparkSession, left: str, right: str, on) -> DataFrame:
 
 
 def ensure_bucketed(
-    spark: SparkSession, sf_dir: str, table: str, key: str, name: str, location: str
+    spark: SparkSession, sf_dir: str, table: str, key: str, db: str, base: str
 ) -> str:
-    """Idempotent cross-session bucketed copy: reuse the in-session
-    catalog entry if present; re-declare a COMMITTED on-disk copy
-    (_SUCCESS marker) to the session's in-memory catalog via
-    ``CREATE TABLE ... CLUSTERED BY ... LOCATION`` (the bucket spec
-    lives in the catalog, the bucket-id file naming on disk — both
-    survive re-declaration); otherwise clear any partial directory and
-    write fresh.  An interrupted write is never silently reused."""
-    import os
-    import shutil
+    """The bucketed copy of ``table`` as a table of ``db``; returns its
+    name.  The files are a shared artifact under ``base``, keyed by the
+    fixture table (``scratch.artifact``): built once through a staging
+    table that is dropped after the write (it is external, so its files
+    stay), then published.  The committed copy is declared to the
+    session's catalog with ``CREATE TABLE ... CLUSTERED BY ... LOCATION``
+    (the bucket spec lives in the catalog, the bucket ids in the file
+    names; both survive re-declaration), so a new session reuses it."""
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{base}'")
 
-    if spark.catalog.tableExists(name):
-        return name
-    if os.path.isfile(os.path.join(location, "_SUCCESS")):
+    def write(tmp: str) -> None:
+        staging = f"{db}.{os.path.basename(tmp).replace('.', '_')}"
+        write_bucketed(spark, sf_dir, table, key, staging, path=tmp)
+        spark.sql(f"DROP TABLE {staging}")
+
+    location = artifact(base, sf_dir, f"bucketed_{table}", (table,), write)
+    name = f"{db}.{os.path.basename(location)}"
+    if not spark.catalog.tableExists(name):
         df = load_table(spark, sf_dir, table)
         cols = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -88,6 +102,4 @@ def ensure_bucketed(
             f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS "
             f"LOCATION '{location}'"
         )
-        return name
-    shutil.rmtree(location, ignore_errors=True)
-    return write_bucketed(spark, sf_dir, table, key, name)
+    return name

@@ -29,9 +29,10 @@ identical.
 Invariant: fixture dirs are IMMUTABLE within a session.  The memo
 freezes each dir's file listing and schema, so a read after an
 in-session rewrite of ``sf_dir`` would be served the old listing.  No
-registered query writes under an sf_dir: every sink goes through
-``sf_scoped_dir`` or the artifact publish protocol into scratch roots
-outside the fixture tree (pinned by tests/test_round14_opt.py).  Code
+registered query writes under an sf_dir: every sink is placed by
+``sources/scratch.py`` (a per-process table or a shared keyed artifact)
+in a scratch root outside the fixture tree (pinned by
+tests/test_round14_opt.py).  Code
 that regenerates a source dir calls :func:`invalidate` first — the
 path-table equivalent of ``REFRESH TABLE``.
 """

@@ -8,7 +8,6 @@ Catalyst pushdown (verified in tests/test_explain.py).
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,20 +26,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def sf_scoped_dir(base: str, sf_dir: str, leaf: str) -> str:
-    """Scratch-output path keyed by the scale-factor directory.
-
-    Write-then-read-back queries (scan_csv/json/xml/orc round trips,
-    compaction) must never share one output directory across scale
-    factors: two sweeps racing on the same host (sf0.01 and sf0.1)
-    would interleave overwrite-write and read-back and produce spurious
-    oracle mismatches.  Same discipline as the streaming sinks'
-    _SINK_IDS and sink_partitioned's md5 tag.
-    """
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    return os.path.join(base, f"{leaf}_{tag}")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

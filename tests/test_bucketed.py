@@ -10,14 +10,23 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def bucketed_pair(spark, oracle_sf_dir):
+def bucketed_pair(spark, oracle_sf_dir, tmp_path_factory):
+    import shutil
+
     from tsengine.sources.bucketed import write_bucketed
 
-    li = write_bucketed(spark, oracle_sf_dir, "lineitem", "l_orderkey", "t_li_b")
-    o = write_bucketed(spark, oracle_sf_dir, "orders", "o_orderkey", "t_o_b")
+    root = tmp_path_factory.mktemp("bucketed_pair")
+    li = write_bucketed(
+        spark, oracle_sf_dir, "lineitem", "l_orderkey", "t_li_b", str(root / "li")
+    )
+    o = write_bucketed(
+        spark, oracle_sf_dir, "orders", "o_orderkey", "t_o_b", str(root / "o")
+    )
     yield li, o
+    # external tables: DROP keeps the files, so remove them with the dir
     for t in (li, o):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+    shutil.rmtree(root)
 
 
 def test_bucketed_join_zero_exchange(spark, oracle_sf_dir, bucketed_pair):

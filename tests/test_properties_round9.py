@@ -26,8 +26,6 @@ strongest TRUE property instead:
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 from hypothesis import given, settings, strategies as st
 
@@ -92,15 +90,11 @@ def test_interp_matches_duckdb_ranks_within_rounding(d, p):
     # Detection power retained: a rank OFF-BY-ONE moves the result by
     # a frac-weighted VALUE gap (>= 0.01 on the 2dp domain, random-
     # double-sized otherwise), which exceeds this bound by >= 7 orders
-    # of magnitude at any generated max|v|.  An ulp never falls below
-    # the subnormal spacing eps*min_normal, so max|v| is floored at
-    # min_normal: DuckDB's blend of {5e-324: 2} at p=0.5 underflows to
-    # 0.0, one subnormal ulp off, where eps*5e-324 would round to 0.
+    # of magnitude at any generated max|v|.
     got = _duck_quantile(d, p)
     mine = _interp(d, p)
     n = sum(d.values())
-    scale = max(max(abs(v) for v in d), sys.float_info.min)
-    bound = (4 * n + 32) * _EPS * scale
+    bound = (4 * n + 32) * _EPS * max(abs(v) for v in d)
     assert abs(mine - got) <= bound, (mine, got, bound)
 
 

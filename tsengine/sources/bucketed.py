@@ -33,24 +33,24 @@ def write_bucketed(
     sf_dir: str,
     table: str,
     key: str,
-    name: str | None = None,
-    path: str | None = None,
+    name: str,
+    path: str,
 ) -> str:
-    """Write one driver table bucketed+sorted by ``key`` as the catalog
-    table ``name`` (external at ``path`` when given, else managed);
-    returns the name.  Idempotent (overwrite)."""
-    name = name or f"{table}_bucketed"
+    """Write one driver table bucketed+sorted by ``key`` to ``path`` as
+    the external catalog table ``name``; returns the name.  Idempotent
+    (overwrite)."""
     df = load_table(spark, sf_dir, table)
     # one file per bucket (pre-cluster the write on the bucket key):
     # join parallelism == bucket count, and a single sorted run per
     # bucket keeps the join-side in-partition sorts cheap.
-    w = (
+    (
         df.repartition(N_BUCKETS, key)
         .write.mode("overwrite")
         .bucketBy(N_BUCKETS, key)
         .sortBy(key)
+        .option("path", path)
+        .saveAsTable(name)
     )
-    (w.option("path", path) if path else w).saveAsTable(name)
     return name
 
 
@@ -87,7 +87,7 @@ def ensure_bucketed(
 
     def write(tmp: str) -> None:
         staging = f"{db}.{os.path.basename(tmp).replace('.', '_')}"
-        write_bucketed(spark, sf_dir, table, key, staging, path=tmp)
+        write_bucketed(spark, sf_dir, table, key, staging, tmp)
         spark.sql(f"DROP TABLE {staging}")
 
     location = artifact(base, sf_dir, f"bucketed_{table}", (table,), write)
